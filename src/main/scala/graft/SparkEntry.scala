@@ -250,24 +250,18 @@ object SparkEntry {
 
   private def qLogCorrelation(s: SparkSession, dir: String): DataFrame = {
     val r = rec(s, dir)
-    val (even, odd) = C.evenOdd(r)
-    val logs = C.standardLogs(r, even, odd).select(col("trace_id"), col("line"))
+    val (even, _) = C.evenOdd(r)
+    val logs = C.standardLogs(r).select(col("trace_id"), col("line"))
     C.correlate(even.select(col("trace_id"), col("event_id"), col("messageid")), logs)
       .select(col("event_id"), col("trace_id"), col("messageid"), col("line"))
   }
 
-  private def qSpanEnrich(s: SparkSession, dir: String): DataFrame = {
-    val r = rec(s, dir)
-    val (even, odd) = C.evenOdd(r)
-    C.spanEnrich(C.standardSpans(r, even, odd))
+  private def qSpanEnrich(s: SparkSession, dir: String): DataFrame =
+    C.spanEnrich(C.standardSpans(rec(s, dir)))
       .select(col("trace_id"), col("span_id"), col("name"), col("remote_service_name"))
-  }
 
-  private def qDependencyGraph(s: SparkSession, dir: String): DataFrame = {
-    val r = rec(s, dir)
-    val (even, odd) = C.evenOdd(r)
-    TraceAnalytics.dependencyGraph(C.standardSpans(r, even, odd))
-  }
+  private def qDependencyGraph(s: SparkSession, dir: String): DataFrame =
+    TraceAnalytics.dependencyGraph(C.standardSpans(rec(s, dir)))
 
   private def qTraceAssembly(s: SparkSession, dir: String): DataFrame = {
     val r = rec(s, dir)

@@ -63,7 +63,7 @@ object ContextOps {
 
   /** P4 ("set" traced peek, reference StreamsConfig.java:34-37): derive
     * the messageid baggage and open a child span for this hop — a pure
-    * projection; the span itself is emitted by [[spanRows]]. */
+    * projection; the span itself is emitted by [[standardSpans]]. */
   def setBaggage(df: DataFrame, prodIds: Boolean = false): DataFrame =
     df.withColumn("messageid", concat(lit("messageid_"), col("value_int").cast("string")))
       .withColumn("span_id",
@@ -93,8 +93,11 @@ object ContextOps {
     guarded :+ (defaultName -> df.filter(none))
   }
 
+  /** The parity route's predicate; null for a null value_int. */
+  private def isEven: Column = pmod(col("value_int"), lit(2)) === 0
+
   def evenOdd(df: DataFrame): (DataFrame, DataFrame) = {
-    val bs = branch(df, Seq("even" -> (pmod(col("value_int"), lit(2)) === 0)), "odd")
+    val bs = branch(df, Seq("even" -> isEven), "odd")
     (bs.head._2, bs.last._2)
   }
 
@@ -103,61 +106,70 @@ object ContextOps {
   /** P5/P5b: a traced or untraced peek's observable effect — a log row
     * correlated (or not) with the record's context. The reference gets
     * this from MDC thread-locals; here it is an explicit projection:
-    * untraced peeks carry null context columns (README.adoc:95-96,112-113). */
-  def logRows(df: DataFrame, op: String, line: Column, traced: Boolean): DataFrame =
+    * untraced peeks carry null context columns (README.adoc:95-96,112-113).
+    * `op` and `traced` are columns, so one projection serves rows of
+    * several hops. */
+  def logRows(df: DataFrame, op: Column, line: Column, traced: Column): DataFrame = {
+    val spanId = mintSpanId(hopSeed(df), op)
     df.select(
       col("ts"),
       lit("INFO").as("level"),
-      lit("graft.ops." + op).as("logger"),
+      concat(lit("graft.ops."), op).as("logger"),
       line.as("line"),
-      (if (traced) col("trace_id") else lit(null).cast("string")).as("trace_id"),
-      (if (traced) mintSpanId(hopSeed(df), lit(op)) else lit(null).cast("string")).as("span_id"),
-      (if (traced) col("messageid") else lit(null).cast("string")).as("messageid"),
+      when(traced, col("trace_id")).as("trace_id"),
+      when(traced, spanId).as("span_id"),
+      when(traced, col("messageid")).as("messageid"),
       // F10: the MDC snapshot the reference dumps per traced record
       // (MDC.getCopyOfContextMap, reference StreamsConfig.java:44;
       // rendered README.adoc:103-108) — a JSON map column, not a
       // thread-local
-      (if (traced)
-        to_json(struct(col("trace_id"), mintSpanId(hopSeed(df), lit(op)).as("span_id"),
-          col("parent_id"), col("messageid")))
-      else lit(null).cast("string")).as("mdc"))
+      when(traced, to_json(struct(col("trace_id"), spanId.as("span_id"),
+        col("parent_id"), col("messageid")))).as("mdc"))
+  }
 
   // ----------------------------------------------------------------- spans
 
-  /** Span emission for a traced hop: one span row per record, child of
-    * the record's parent span. `kafka_topic`/`remote_service_name` are
-    * set on send spans (cause=FINISHED) and null otherwise. */
-  def spanRows(df: DataFrame, op: String, kafkaTopic: Option[String]): DataFrame =
-    df.select(
-      col("trace_id"),
-      mintSpanId(hopSeed(df), lit(op)).as("span_id"),
-      col("parent_id"),
-      col("sampled"),
-      lit(op).as("name"),
-      lit(App).as("local_service"),
-      kafkaTopic.map(_ => lit("kafka")).getOrElse(lit(null).cast("string"))
-        .as("remote_service_name"),
-      kafkaTopic.map(lit(_)).getOrElse(lit(null).cast("string")).as("kafka_topic"),
-      lit("FINISHED").as("cause"),
-      col("ts"))
+  /** Each record's two hops — "set", then the send hop of its parity
+    * branch — as ONE explode of the hop name into column `hop`, so a
+    * fan-out over both hops scans `df` once. Callers derive every
+    * output column from the name, which keeps each an independent
+    * expression Catalyst can prune (an exploded array of whole structs
+    * would not be). Routing is [[branch]]'s: a null parity goes odd. */
+  private def hops(df: DataFrame, even: String, odd: String): DataFrame =
+    df.withColumn("hop", explode(array(lit("set"),
+      when(coalesce(isEven, lit(false)), even).otherwise(odd))))
 
   /** The reference topology's standard log fan-out: a traced "set" line
     * per record, a traced line per even record, an UNTRACED line per
     * odd record (reference README.adoc:93-114). Single source of truth
     * for both the batch queries and the streaming pipeline. */
-  def standardLogs(all: DataFrame, even: DataFrame, odd: DataFrame): DataFrame =
-    logRows(all, "set", concat(lit("Got number: "), col("value_int").cast("string")), traced = true)
-      .unionByName(logRows(even, "even",
-        concat(lit("Even number: "), col("value_int").cast("string")), traced = true))
-      .unionByName(logRows(odd, "odd",
-        concat(lit("Odd number: "), col("value_int").cast("string")), traced = false))
+  def standardLogs(df: DataFrame): DataFrame = {
+    val hop = col("hop")
+    logRows(hops(df, "even", "odd"), hop,
+      concat(when(hop === "set", "Got").when(hop === "even", "Even").otherwise("Odd"),
+        lit(" number: "), col("value_int").cast("string")),
+      traced = hop =!= "odd")
+  }
 
   /** The reference topology's standard span fan-out: a "set" span per
-    * record plus a send span per branch, tagged with its topic. */
-  def standardSpans(all: DataFrame, even: DataFrame, odd: DataFrame): DataFrame =
-    spanRows(all, "set", None)
-      .unionByName(spanRows(even, "send-even", Some("even-numbers")))
-      .unionByName(spanRows(odd, "send-odd", Some("odd-numbers")))
+    * record plus a send span per branch, child of the record's parent
+    * span. `kafka_topic`/`remote_service_name` are set on send spans
+    * (cause=FINISHED) and null on "set". */
+  def standardSpans(df: DataFrame): DataFrame = {
+    val hop = col("hop")
+    val topic = when(hop === "send-even", "even-numbers").when(hop === "send-odd", "odd-numbers")
+    hops(df, "send-even", "send-odd").select(
+      col("trace_id"),
+      mintSpanId(hopSeed(df), hop).as("span_id"),
+      col("parent_id"),
+      col("sampled"),
+      hop.as("name"),
+      lit(App).as("local_service"),
+      when(topic.isNotNull, lit("kafka")).as("remote_service_name"),
+      topic.as("kafka_topic"),
+      lit("FINISHED").as("cause"),
+      col("ts"))
+  }
 
   /** P6 span enrichment (reference
     * KafkaStreamsLogCorrelationApplication.java:22-31): rewrite

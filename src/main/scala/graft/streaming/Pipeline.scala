@@ -10,18 +10,25 @@ import graft.ops.ContextOps
   * (reference: src/main/java/com/github/timtebeek/StreamsConfig.java:30-52):
   * one keyed input stream is decoded, context-enriched, branched on
   * parity, and written to two record sinks plus span and log side
-  * outputs — all in ONE pass per micro-batch via foreachBatch, so the
-  * source is scanned once no matter how many sinks hang off it
+  * outputs — all from ONE persisted micro-batch via foreachBatch, so
+  * the source is read once no matter how many sinks hang off it
   * (SURVEY.md §7.4: two writeStream queries would re-read the source).
+  * Each output is one scan of that batch (the span and log outputs
+  * explode each record's two hops). The first sink's write fills the
+  * batch cache; the other three then write concurrently.
   *
-  * Delivery: at-least-once per sink. The micro-batch is persisted
-  * before fan-out so a retry re-emits the same rows (idempotent for
-  * deterministic sinks keyed on (topic, offset)).
+  * Delivery: at-least-once per sink. A batch whose fan-out fails is
+  * not committed, so a restart re-delivers it to every sink
+  * (idempotent for deterministic sinks keyed on (topic, offset)).
   */
 object Pipeline {
 
   /** Sink abstraction: batchId + the rows of one output. Parquet dirs
-    * in tests; a Kafka producer writer in production. */
+    * in tests; a Kafka producer writer in production. [[start]] calls
+    * the sinks after the first concurrently, each on its own thread, so
+    * those must be thread-safe ([[parquetSink]] and
+    * [[graft.sources.KafkaIO.sink]] are: each call is an independent
+    * write). */
   type Sink = (Long, DataFrame) => Unit
 
   def parquetSink(path: String): Sink = (_, df) => {
@@ -34,9 +41,8 @@ object Pipeline {
   def processBatch(raw: DataFrame): (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val decoded = ContextOps.setBaggage(ContextOps.decode(raw))
     val (even, odd) = ContextOps.evenOdd(decoded)
-    val spans = ContextOps.standardSpans(decoded, even, odd)
-    val logs = ContextOps.standardLogs(decoded, even, odd)
-    (withOutputHeaders(even), withOutputHeaders(odd), spans, logs)
+    (withOutputHeaders(even), withOutputHeaders(odd),
+      ContextOps.standardSpans(decoded), ContextOps.standardLogs(decoded))
   }
 
   /** Output records carry re-encoded headers: b3 replaced with the
@@ -809,7 +815,8 @@ object Pipeline {
   }
 
   /** Start the streaming query: raw Kafka-shaped stream in, four sinks
-    * out, one source scan per micro-batch. */
+    * out, one source read per micro-batch. The batch is unpersisted
+    * only once every sink call has returned. */
   def start(
       raw: DataFrame,
       evenSink: Sink, oddSink: Sink, spanSink: Sink, logSink: Sink,
@@ -822,14 +829,46 @@ object Pipeline {
         batch.persist()
         try {
           val (even, odd, spans, logs) = processBatch(batch)
-          evenSink(batchId, even)
-          oddSink(batchId, odd)
-          spanSink(batchId, spans)
-          logSink(batchId, logs)
+          fanOut(batchId, Seq(evenSink -> even, oddSink -> odd, spanSink -> spans, logSink -> logs))
         } finally batch.unpersist()
         ()
       }
       .start()
+
+  /** One micro-batch's sink calls. The first runs alone: its write
+    * fills the persisted batch, which the others would otherwise wait
+    * on block by block. The rest then run concurrently, each on a
+    * thread started here; Spark's local properties are inheritable, so
+    * their jobs carry the stream's job group and `query.stop()` cancels
+    * them. Returns once every call has returned, then rethrows the
+    * first failure in sink order; a stop (interrupt) while waiting is
+    * passed on to the calls and rethrown after them. */
+  private def fanOut(batchId: Long, calls: Seq[(Sink, DataFrame)]): Unit = {
+    val (firstSink, firstDf) = calls.head
+    firstSink(batchId, firstDf)
+    val failures = new Array[Throwable](calls.size - 1)
+    val threads = calls.tail.zipWithIndex.map { case ((sink, df), i) =>
+      val t = new Thread(() =>
+        try sink(batchId, df) catch { case e: Throwable => failures(i) = e },
+        s"pipeline-batch-$batchId-sink-${i + 1}")
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+    var interrupted = false
+    threads.foreach { t =>
+      while (t.isAlive) {
+        try t.join()
+        catch {
+          case _: InterruptedException =>
+            if (!interrupted) threads.foreach(_.interrupt())
+            interrupted = true
+        }
+      }
+    }
+    if (interrupted) throw new InterruptedException(s"fan-out of batch $batchId interrupted")
+    failures.find(_ != null).foreach(e => throw e)
+  }
 
   /** Streaming windowed funnel conversion report — the live twin of
     * the batch `a_funnel_hourly` row: [[StreamingFunnel]]'s depth

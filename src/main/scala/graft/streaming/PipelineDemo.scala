@@ -135,7 +135,7 @@ object PipelineDemo {
       .select(col("trace_id"), col("value_int"), col("ts"))
     val ssLogs = graft.ops.ContextOps.logRows(
         graft.ops.ContextOps.setBaggage(graft.ops.ContextOps.decode(ssLog.toDF())),
-        "set", concat(lit("Got number: "), col("value_int").cast("string")), traced = true)
+        lit("set"), concat(lit("Got number: "), col("value_int").cast("string")), traced = lit(true))
       .select(col("trace_id"), col("ts").as("log_ts"), col("line"))
     val ssq = Pipeline.correlateStreams(ssRecs, ssLogs, "10 minutes")
       .writeStream.format("memory").queryName("demo_sscorr")

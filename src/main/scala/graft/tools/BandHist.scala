@@ -48,7 +48,7 @@ object BandHist {
         .groupBy(col("b.seg").as("seg"), col("b.segval"))
         .agg(count(lit(1)).as("c"))
         .groupBy("seg")
-        .agg(sum(expr("c * (c - 1) / 2")).cast("long").as("cand_pairs"),
+        .agg(sum(expr("c * (c - 1) div 2")).as("cand_pairs"),
           max("c").as("max_bucket"), count(lit(1)).as("n_buckets"))
         .orderBy("seg")
         .collect()
@@ -70,7 +70,7 @@ object BandHist {
     import org.apache.spark.sql.DataFrame
     def audit(name: String, keyed: DataFrame): Unit = {
       val r = keyed.groupBy("k").agg(count(lit(1)).as("c"))
-        .agg(sum(expr("c * (c - 1) / 2")).cast("long").as("cand"),
+        .agg(sum(expr("c * (c - 1) div 2")).as("cand"),
           max("c").as("maxb"), count(lit(1)).as("nb"))
         .head()
       println(f"[audit] $name%-22s cand_pairs=${r.getLong(0)}%,15d " +

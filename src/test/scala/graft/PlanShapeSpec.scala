@@ -61,6 +61,135 @@ class PlanShapeSpec extends SparkSpec {
     assert(p.contains("InMemoryTableScan"), s"rec cache not used:\n$p")
   }
 
+  // ------------------------------------------------ one-scan hop fan-out
+
+  /** The per-hop form the one-scan span/log fan-out replaced — one scan
+    * of the records per hop, unioned — kept as the reference the
+    * one-scan form must equal row for row. */
+  private object ThreeScan {
+    import org.apache.spark.sql.{Column, DataFrame}
+    import org.apache.spark.sql.functions._
+    import graft.codec.Codecs.mintSpanId
+    import graft.ops.ContextOps
+
+    private def seed(df: DataFrame): Column =
+      if (df.columns.contains("hop_seed")) col("hop_seed") else col("trace_id")
+    private def nul: Column = lit(null).cast("string")
+
+    private def logRows(df: DataFrame, op: String, line: Column, traced: Boolean): DataFrame =
+      df.select(col("ts"), lit("INFO").as("level"), lit("graft.ops." + op).as("logger"),
+        line.as("line"),
+        (if (traced) col("trace_id") else nul).as("trace_id"),
+        (if (traced) mintSpanId(seed(df), lit(op)) else nul).as("span_id"),
+        (if (traced) col("messageid") else nul).as("messageid"),
+        (if (traced) to_json(struct(col("trace_id"), mintSpanId(seed(df), lit(op)).as("span_id"),
+          col("parent_id"), col("messageid"))) else nul).as("mdc"))
+
+    private def spanRows(df: DataFrame, op: String, topic: Option[String]): DataFrame =
+      df.select(col("trace_id"), mintSpanId(seed(df), lit(op)).as("span_id"),
+        col("parent_id"), col("sampled"), lit(op).as("name"),
+        lit(ContextOps.App).as("local_service"),
+        topic.map(_ => lit("kafka")).getOrElse(nul).as("remote_service_name"),
+        topic.map(lit(_)).getOrElse(nul).as("kafka_topic"),
+        lit("FINISHED").as("cause"), col("ts"))
+
+    private def line(word: String): Column =
+      concat(lit(s"$word number: "), col("value_int").cast("string"))
+
+    def logs(all: DataFrame): DataFrame = {
+      val (even, odd) = ContextOps.evenOdd(all)
+      logRows(all, "set", line("Got"), traced = true)
+        .unionByName(logRows(even, "even", line("Even"), traced = true))
+        .unionByName(logRows(odd, "odd", line("Odd"), traced = false))
+    }
+
+    def spans(all: DataFrame): DataFrame = {
+      val (even, odd) = ContextOps.evenOdd(all)
+      spanRows(all, "set", None)
+        .unionByName(spanRows(even, "send-even", Some("even-numbers")))
+        .unionByName(spanRows(odd, "send-odd", Some("odd-numbers")))
+    }
+  }
+
+  private def assertSameRows(what: String, got: org.apache.spark.sql.DataFrame,
+      want: org.apache.spark.sql.DataFrame): Unit = {
+    assert(got.columns.toSeq === want.columns.toSeq, what)
+    val extra = got.exceptAll(want).collect().toSeq
+    val missing = want.exceptAll(got).collect().toSeq
+    assert(extra.isEmpty && missing.isEmpty,
+      s"$what: rows only in the one-scan form $extra, only in the reference $missing")
+  }
+
+  /** A decoded-stream micro-batch with the routing edge cases: a value
+    * that decodes to null (routed odd), an unheadered record (minted
+    * root context), a negative even value and a record carrying two b3
+    * headers (the last wins). */
+  private def microBatch: Seq[graft.model.RawRecord] = {
+    import graft.model.{Header, RawRecord}
+    def be(i: Int) = java.nio.ByteBuffer.allocate(4).putInt(i).array()
+    def b3(t: String, s: String) = Header("b3", s"$t-$s-1".getBytes("UTF-8"))
+    def rec(v: Array[Byte], off: Long, hs: Header*) =
+      RawRecord(s"k$off".getBytes("UTF-8"), v, "numbers", 0, off,
+        new java.sql.Timestamp(1700000000000L + off), 0, hs)
+    val (t1, s1) = ("1111111111111111", "aaaaaaaaaaaaaaaa")
+    val (t2, s2) = ("2222222222222222", "bbbbbbbbbbbbbbbb")
+    Seq(rec(be(2), 1, b3(t1, s1)), rec(be(3), 2),
+      rec(Array[Byte](1, 2), 3, b3("3333333333333333", s1)),
+      rec(be(-4), 4, b3(t1, s2)), rec(be(5), 5, b3(t1, s1), b3(t2, s2)))
+  }
+
+  test("one-scan span and log fan-out equals the three-scan union over the fixture events") {
+    val r = graft.ops.ContextOps.setBaggage(graft.ops.ContextOps.enrichEvents(
+      SparkEntry.T(spark, sf, "events")))
+    assertSameRows("spans", graft.ops.ContextOps.standardSpans(r), ThreeScan.spans(r))
+    assertSameRows("logs", graft.ops.ContextOps.standardLogs(r), ThreeScan.logs(r))
+  }
+
+  test("one-scan fan-out equals the three-scan union on a null value and a duplicate b3") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val d = graft.ops.ContextOps.setBaggage(graft.ops.ContextOps.decode(
+      spark.createDataFrame(microBatch)))
+    val spans = graft.ops.ContextOps.standardSpans(d)
+    val logs = graft.ops.ContextOps.standardLogs(d)
+    assertSameRows("spans", spans, ThreeScan.spans(d))
+    assertSameRows("logs", logs, ThreeScan.logs(d))
+    // the null value goes odd: a send-odd span and an untraced log row
+    val nullTrace = d.filter(col("value_int").isNull).select("trace_id").as[String].collect()
+    assert(nullTrace.length === 1)
+    assert(spans.filter(col("trace_id") === nullTrace.head).select("name").as[String]
+      .collect().sorted.toSeq === Seq("send-odd", "set"))
+    assert(logs.filter(col("logger") === "graft.ops.odd" && col("line").isNull &&
+      col("trace_id").isNull).count() === 1)
+    // the last of the duplicate b3 headers sets the record's context
+    assert(spans.filter(col("trace_id") === "2222222222222222" &&
+      col("parent_id") === "bbbbbbbbbbbbbbbb").count() === 2)
+  }
+
+  test("processBatch's span and log outputs each scan the batch once, with no union") {
+    val batch = spark.createDataFrame(microBatch).persist()
+    try {
+      val (_, _, spans, logs) = graft.streaming.Pipeline.processBatch(batch)
+      for ((name, df) <- Seq("spans" -> spans, "logs" -> logs)) {
+        val p = df.queryExecution.executedPlan.toString
+        assert("InMemoryTableScan".r.findAllIn(p).length === 1,
+          s"$name must scan the persisted batch once:\n$p")
+        assert(!p.contains("Union"), s"$name must not union per-hop scans:\n$p")
+      }
+    } finally batch.unpersist()
+  }
+
+  test("log correlation prunes the unused mdc JSON out of the log fan-out") {
+    // the optimizer rewrites to_json into an invoke of StructsToJsonEvaluator
+    def json(p: String) = p.toLowerCase.contains("to_json") || p.toLowerCase.contains("tojson")
+    val logs = graft.ops.ContextOps.standardLogs(graft.ops.ContextOps.setBaggage(
+      graft.ops.ContextOps.enrichEvents(SparkEntry.T(spark, sf, "events"))))
+    assert(json(logs.queryExecution.optimizedPlan.toString), "the log fan-out renders mdc")
+    val p = SparkEntry.queries("q_log_correlation")(spark, sf)
+      .queryExecution.optimizedPlan.toString
+    assert(!json(p), s"mdc must be pruned:\n$p")
+  }
+
   test("IVF assignment is a narrow broadcast map: no window, constant-width codebook") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val p = graft.ext.Similarity.ivfAssign(emb, 8)

@@ -369,8 +369,8 @@ class StreamingPipelineSpec extends SparkSpec {
     val recs = graft.ops.ContextOps.setBaggage(graft.ops.ContextOps.decode(recIn.toDF()))
       .select(col("trace_id"), col("value_int"), col("ts"))
     val logSide = graft.ops.ContextOps.setBaggage(graft.ops.ContextOps.decode(logIn.toDF()))
-    val logs = graft.ops.ContextOps.logRows(logSide, "set",
-        concat(lit("Got number: "), col("value_int").cast("string")), traced = true)
+    val logs = graft.ops.ContextOps.logRows(logSide, lit("set"),
+        concat(lit("Got number: "), col("value_int").cast("string")), traced = lit(true))
       .select(col("trace_id"), col("ts").as("log_ts"), col("line"))
     val q = Pipeline.correlateStreams(recs, logs, "10 minutes")
       .writeStream.format("memory").queryName("sscorr")
