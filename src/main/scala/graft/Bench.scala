@@ -33,16 +33,19 @@ object Bench {
       .trim.split("\\s+")(0).toDouble
     catch { case _: Throwable => -1.0 }
 
-  /** (total, steal) jiffies from `/proc/stat`'s aggregate cpu line, or
-    * (-1, 0) when unreadable. Bracketing the run with two of these
-    * yields the HOST-steal fraction — CPU time the hypervisor gave to
-    * co-tenants while this guest was runnable. The quiesce gate can
-    * only see GUEST load; a host contended by neighbors inflates every
-    * row uniformly with load1_start < 1 (measured r13: four same-code
-    * runs 301 → 324 → 377 → 426 s as idle-box steal climbed to ~13%),
-    * so the contract line carries `steal_pct` to make that run
-    * self-documenting instead of judge-adjudicated. */
-  private[graft] def cpuStat(): (Long, Long) =
+  /** (total, steal, iowait) jiffies from `/proc/stat`'s aggregate cpu
+    * line, or (-1, 0, 0) when unreadable. Bracketing the run with two
+    * of these yields the HOST-steal fraction — CPU time the hypervisor
+    * gave to co-tenants while this guest was runnable. The quiesce gate
+    * can only see GUEST load; a host contended by neighbors inflates
+    * every row uniformly with load1_start < 1 (measured r13: four
+    * same-code runs 301 → 324 → 377 → 426 s as idle-box steal climbed
+    * to ~13%), so the contract line carries `steal_pct` to make that
+    * run self-documenting instead of judge-adjudicated. The iowait
+    * share of the same window is the disk-stall companion: a blip
+    * whose window carries high iowait is storage latency
+    * (shuffle/persist spill), not compute. */
+  private[graft] def cpuStat(): (Long, Long, Long) =
     try {
       val f = new String(java.nio.file.Files.readAllBytes(
           java.nio.file.Paths.get("/proc/stat")), "UTF-8")
@@ -50,14 +53,22 @@ object Bench {
       // sum only through steal (first 8 fields): guest/guest_nice are
       // already accounted inside user/nice, and double-counting them
       // understates steal_pct on hosts running nested guests (ADVICE r13)
-      (f.take(8).sum, if (f.length > 7) f(7) else 0L)
-    } catch { case _: Throwable => (-1L, 0L) }
+      (f.take(8).sum, if (f.length > 7) f(7) else 0L, if (f.length > 4) f(4) else 0L)
+    } catch { case _: Throwable => (-1L, 0L, 0L) }
 
   /** Host-steal percentage between two [[cpuStat]] samples; -1 when
     * unreadable or no time elapsed. */
-  private[graft] def stealPct(start: (Long, Long), end: (Long, Long)): Double =
-    if (start._1 < 0 || end._1 < 0 || end._1 <= start._1) -1.0
-    else math.rint((end._2 - start._2) * 10000.0 / (end._1 - start._1)) / 100.0
+  private[graft] def stealPct(start: (Long, Long, Long), end: (Long, Long, Long)): Double =
+    pct(start._1, start._2, end._1, end._2)
+
+  /** iowait percentage between two [[cpuStat]] samples, with the same
+    * -1 rule as [[stealPct]]. */
+  private[graft] def iowaitPct(start: (Long, Long, Long), end: (Long, Long, Long)): Double =
+    pct(start._1, start._3, end._1, end._3)
+
+  private def pct(total0: Long, part0: Long, total1: Long, part1: Long): Double =
+    if (total0 < 0 || total1 < 0 || total1 <= total0) -1.0
+    else math.rint((part1 - part0) * 10000.0 / (total1 - total0)) / 100.0
 
   /** Cumulative run-queue wait of the WHOLE process (ns): the sum of
     * /proc/self/task/<tid>/schedstat field 2 over every live thread —
@@ -88,18 +99,6 @@ object Bench {
         sum
       }
     } catch { case _: Throwable => -1L }
-
-  /** (total, iowait) jiffies from /proc/stat — the disk-stall
-    * companion of [[cpuStat]]'s steal: a blip whose window carries
-    * high iowait is storage latency (shuffle/persist spill), not
-    * compute. */
-  private[graft] def ioStat(): (Long, Long) =
-    try {
-      val f = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("/proc/stat")), "UTF-8")
-        .linesIterator.next().trim.split("\\s+").drop(1).map(_.toLong)
-      (f.take(8).sum, if (f.length > 4) f(4) else 0L)
-    } catch { case _: Throwable => (-1L, 0L) }
 
   /** Fixed single-thread CPU probe: 2²⁶ xorshift steps, returning
     * milliseconds. The r13 closing runs measured the SAME code at
@@ -147,25 +146,6 @@ object Bench {
       l = load1()
     }
     (System.nanoTime() - t0) / 1e9
-  }
-
-  /** Drop two known-benign WARN emitters to ERROR so the driver's
-    * ~2000-char stdout/stderr tail carries query output, not spam:
-    * WindowExecBase's "No Partition Defined" fires for the two
-    * deliberately-bounded unpartitioned windows (inputs are tiny
-    * aggregates, documented at their call sites), and
-    * ResolveWriteToStream warns per test streaming query about
-    * temporary checkpoints. Package-level for the window one — the
-    * Logging trait names loggers by runtime class, so subclasses
-    * would slip a class-level filter. */
-  private[graft] def quietKnownWarns(): Unit = {
-    import org.apache.logging.log4j.Level
-    import org.apache.logging.log4j.core.config.Configurator
-    Seq(
-      "org.apache.spark.sql.execution.window",
-      "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream",
-      "org.apache.spark.sql.execution.streaming.ResolveWriteToStream"
-    ).foreach(Configurator.setLevel(_, Level.ERROR))
   }
 
   /** 2-dp JSON number, trailing zeros stripped. */
@@ -224,32 +204,7 @@ object Bench {
     spinProbeMs()
     val spinMs = spinProbeMs()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // fixtures are one small file per table — split them so scans use
-      // every core, as a many-file cluster layout would
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      // single-row-group fixture files can't be split by the file confs;
-      // let the CPU-bound dedup builds take one explicit spread shuffle
-      .config("spark.graft.spreadSmallInputs", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // Spark 4's per-session artifact isolation attaches a spark://
-      // class-fetch URI to every SQLExecution-threadpool job (broadcast
-      // builds, subqueries) even when NO artifact was ever added; the
-      // executor then resolves every codegen class-lookup MISS — janino
-      // probes dozens per generated class — through a netty file-server
-      // round trip. One driver, one session, no artifacts: disable it.
-      // Measured (OPTIMIZATION_r14.md): thread dumps of a degraded run
-      // showed 31/32 task threads parked on the codegen KeyLock behind
-      // one thread inside ExecutorClassLoader→NettyRpcEnv reads.
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    quietKnownWarns()
+    val spark = GraftSession.build()
 
     def timed(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
@@ -322,8 +277,7 @@ object Bench {
     val prepPar = sys.env.get("SPARK_GRAFT_PREPARE_PAR")
       .flatMap(v => scala.util.Try(v.toInt).toOption)
       .getOrElse {
-        val c = scala.util.Try(cpus.toInt).getOrElse(4)
-        math.max(1, math.min(8, c / 4))
+        math.max(1, math.min(8, GraftSession.cpus / 4))
       }
     // Per-STEP environment attribution (VERDICT r14 task 2): the r14
     // official record measured prepare at 325.8 s (par=8) against the
@@ -349,7 +303,7 @@ object Bench {
             // in event logs / the UI (guide §1.5)
             spark.sparkContext.setJobDescription(s"prepare: $name")
             var ok = true
-            val rq0 = runqNs(); val cs0 = cpuStat(); val io0 = ioStat()
+            val rq0 = runqNs(); val cs0 = cpuStat()
             val sec = timed {
               try step(spark, sfDir)
               catch { case e: Throwable =>
@@ -358,11 +312,11 @@ object Bench {
               }
             }
             if (sec >= 0.3) {
-              val rq1 = runqNs(); val cs1 = cpuStat(); val io1 = ioStat()
+              val rq1 = runqNs(); val cs1 = cpuStat()
               if (rq0 >= 0 && rq1 >= rq0) prepRunq.put(name, (rq1 - rq0) / 1e9)
               val st = stealPct(cs0, cs1)
               if (st >= 0) prepSteal.put(name, st)
-              val io = stealPct(io0, io1) // same delta/denominator arithmetic
+              val io = iowaitPct(cs0, cs1)
               if (io >= 0) prepIo.put(name, io)
             }
             if (ok) sec else -1.0
@@ -412,7 +366,7 @@ object Bench {
     val queryIo = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       var ok = true
-      val rq0 = runqNs(); val cs0 = cpuStat(); val io0 = ioStat()
+      val rq0 = runqNs(); val cs0 = cpuStat()
       val sec = timed {
         try runNoop(fn(spark, sfDir))
         catch { case e: Throwable =>
@@ -423,11 +377,11 @@ object Bench {
       // over a sub-second window quantizes steal/iowait to mostly-noise
       // values that read as real contention (ADVICE r14)
       if (sec >= 0.3) {
-        val rq1 = runqNs(); val cs1 = cpuStat(); val io1 = ioStat()
+        val rq1 = runqNs(); val cs1 = cpuStat()
         if (rq0 >= 0 && rq1 >= rq0) queryRunq(name) = (rq1 - rq0) / 1e9
         val st = stealPct(cs0, cs1)
         if (st >= 0) querySteal(name) = st
-        val io = stealPct(io0, io1) // same delta/denominator arithmetic
+        val io = iowaitPct(cs0, cs1)
         if (io >= 0) queryIo(name) = io
       }
       name -> (if (ok) sec else -1.0)
@@ -524,38 +478,6 @@ object Bench {
             approx_count_distinct(col("l_orderkey")).as("n_orders"),
             count(lit(1)).as("n_rows"))
       }),
-      // the persisted-substrate tier measured (PlanCache.persisted):
-      // COLD deletes any prior tier, builds a fresh 4-gram shingle
-      // index (no registry query uses n=4, so nothing is pre-warmed)
-      // and writes it hash-clustered to disk; WARM is what a
-      // RESTARTED driver pays — a scan of the stored bytes instead of
-      // the prepare-phase rebuild. The pair is the measured case for
-      // durable substrates across driver sessions.
-      "substrate_persist_cold" -> ((s, dir) => {
-        graft.sources.StagingTables.deleteRecursively(
-          new java.io.File("target/substrates/shingles4"))
-        graft.sources.StagingTables.deleteRecursively(
-          new java.io.File("target/substrates/shingles4.fingerprint"))
-        graft.ops.PlanCache.persisted("target/substrates", "shingles4",
-            graft.ops.PlanCache.sourceFingerprint(Seq(s"$dir/documents.parquet")),
-            s, "h", 32) {
-          graft.ext.Dedup.shingleHashes(
-            s.read.parquet(s"$dir/documents.parquet"), 4)
-        }
-      }),
-      // WARM goes through persisted() on a FRESH session (the restart
-      // identity), so the measured number includes what a restarted
-      // driver actually pays — the sidecar read + the source
-      // fingerprint walk + the stored-bytes scan. The build thunk
-      // throws: a warm run that rebuilds is a broken tier, and the
-      // extra's -1 makes that loud in the record.
-      "substrate_persist_warm" -> ((s, dir) =>
-        graft.ops.PlanCache.persisted("target/substrates", "shingles4",
-            graft.ops.PlanCache.sourceFingerprint(Seq(s"$dir/documents.parquet")),
-            s.newSession(), "h", 32) {
-          throw new IllegalStateException(
-            "substrate_persist_warm must REUSE the cold run's substrate, not rebuild")
-        }),
       // the 100 TB swap-in for p_stats_profile: the exact
       // multi-countDistinct plans as ONE Expand (scan multiplied per
       // distinct aggregate — oracle-exact, the registry row), while a

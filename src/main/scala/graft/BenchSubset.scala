@@ -1,12 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Dev harness: time a comma-separated subset of registry queries
-  * under the exact Bench session confs (local[32], 32 shuffle
-  * partitions, 4m split target, noop sink), without paying the full
-  * 301-row run while iterating on one family. Timings are printed
-  * per query plus the subset total; NOT part of the driver protocol.
+  * under the Bench session ([[GraftSession]], noop sink), without
+  * paying the full registry run while iterating on one family.
+  * Timings are printed per query plus the subset total; NOT part of
+  * the driver protocol.
   *
   * Usage: runMain graft.BenchSubset <sfDir> <q1,q2,...> [reps]
   */
@@ -16,22 +16,7 @@ object BenchSubset {
     val sfDir = args(0)
     val names = args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val reps = if (args.length >= 3) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.graft.spreadSmallInputs", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // default matches Bench (see the rationale there); the env knob
-      // exists so the isolation cost stays A/B-measurable
-      .config("spark.sql.artifact.isolation.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_ARTIFACT_ISOLATION", "false"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Bench.quietKnownWarns()
+    val spark = GraftSession.build()
     def timed(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }

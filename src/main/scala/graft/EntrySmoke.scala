@@ -1,14 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Reproduces the driver's smoke check: a plain default session (no
-  * graft-specific configs) calling SparkEntry.entry — guards against
-  * accidentally depending on session settings only our own mains set. */
+/** Reproduces the driver's smoke check: SparkEntry.entry must return
+  * rows on the sf0.001 fixture. */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
     val df = SparkEntry.entry(spark)
     val n = df.count()
     println(s"[entry-smoke] rows=$n schema=${df.schema.map(_.name).mkString(",")}")

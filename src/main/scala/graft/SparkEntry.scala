@@ -2547,7 +2547,7 @@ object SparkEntry {
     * hashed by the fused [[graft.functions.ByteWindowHash]] expression
     * (one payload pass, no hex-string round trip); bit-for-bit the
     * hex().substr().portableHash composition the oracle recomputes. */
-  private def mediaFps(s: SparkSession, dir: String): DataFrame =
+  private[graft] def mediaFps(s: SparkSession, dir: String): DataFrame =
     graft.ops.PlanCache.cached("media-fps-4-64", {
       val grams = T(s, dir, "documents")
         .select(col("doc_id"),
@@ -2557,15 +2557,16 @@ object SparkEntry {
     })
 
   private def mMediaNearDup(s: SparkSession, dir: String): DataFrame =
-    // bandBits = 56: the fingerprint's voters are 56-bit window hashes
-    // ([[graft.functions.ByteWindowHash]] reads 7 digest bytes) and the
-    // simhashOfHashes vote rule (ones*2 > n) leaves bits 56-63 zero for
-    // EVERY row, so banding them made one segment a single degenerate
-    // (seg, 0) bucket = an N²/2 all-pairs join key (guide §2.5 hot key).
-    // Banding only the 56 live bits keeps guaranteed recall (all
-    // differing bits lie inside the band) and the exact bit_count
-    // filter is unchanged — identical pairs out.
-    Dedup.simhashPairs(mediaFps(s, dir), 8, bits = 64, bandBits = 56)
+    // bandBits = HashBits (56): the fingerprint's voters are 56-bit
+    // window hashes and the simhashOfHashes vote rule (ones*2 > n)
+    // leaves bits 56-63 zero for EVERY row, so banding them made one
+    // segment a single degenerate (seg, 0) bucket = an N²/2 all-pairs
+    // join key (guide §2.5 hot key; BandHistSpec pins it). Banding only
+    // the live bits keeps guaranteed recall (all differing bits lie
+    // inside the band) and the exact bit_count filter is unchanged —
+    // identical pairs out.
+    Dedup.simhashPairs(mediaFps(s, dir), 8, bits = 64,
+      bandBits = graft.functions.ByteWindowHash.HashBits)
 
   /** Media near-dup component labels, PlanCache-materialized so the
     * union-find (an eager pair collect inside
@@ -2614,7 +2615,7 @@ object SparkEntry {
   /** The winnowing fingerprint index, materialized once — shared by
     * t_winnow and d_winnow_pairs (and charged to the winnow_index
     * prepare step in the bench). */
-  private def winnowIdx(s: SparkSession, dir: String): DataFrame =
+  private[graft] def winnowIdx(s: SparkSession, dir: String): DataFrame =
     graft.ops.PlanCache.cached("winnow-3-4",
       TextOps.winnow(T(s, dir, "documents"), 3, 4))
 
@@ -4396,7 +4397,7 @@ object SparkEntry {
     val docs = T(s, dir, "documents")
     // project the token array FIRST: shingles references its input
     // n+2 times, and an inlined tokens(text) would re-tokenize per
-    // reference (measured 20× on the corpus scan — ProbeKn)
+    // reference (measured 20× on the corpus scan — BASELINE.md)
     val occ3 = docs.select(Codecs.tokens(col("text")).as("tk"))
       .select(explode(graft.codec.Codecs.shingles(col("tk"), 3)).as("s"))
     val tri = occ3.groupBy("s").agg(count(lit(1)).as("c123"))
@@ -5849,7 +5850,7 @@ object SparkEntry {
     // 5.1 s warm at sf0.1 — AQE does NOT reuse the agg exchange
     // across the broadcast boundary, so araw computed twice per
     // round and the per-phase form stays the fastest shape. r13
-    // closed the cadence question (tools/ProbeIterate.scala,
+    // closed the cadence question (docs/SCALE.md round 13,
     // hash-equal variants, interleaved 2-rep MINs): once-per-round
     // fold 5.47 s vs per-phase 3.75 s (the k=2 negative, now measured
     // directly), per-phase NON-EAGER checkpoints 3.68 s — a wash, so

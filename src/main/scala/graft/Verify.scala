@@ -1,27 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Runs under
+  * the Bench session ([[GraftSession]]), so a row whose result depends
+  * on file splits or partition counts shows up here, not only in the
+  * timings. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // optional trailing args restrict the run to named queries — an
     // iteration convenience; the driver always passes exactly two
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.graft.spreadSmallInputs", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // see Bench.scala: single-session driver, no artifacts — keep the
-      // spark:// session classloader off the codegen path
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Bench.quietKnownWarns()
+    val spark = GraftSession.build()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only.contains(name) }

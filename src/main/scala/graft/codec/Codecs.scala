@@ -99,8 +99,8 @@ object Codecs {
     * lookups + one concat_ws per position instead of slice() +
     * array_join(): slice COPIES a sub-array per shingle and the pair
     * runs interpreted inside the transform lambda — measured 12×
-    * slower on the corpus scan (ProbeKn, sf0.1: 6.5 s → 0.5 s) for a
-    * bit-identical result (same positions, same joiner, tokens are
+    * slower on the corpus scan (sf0.1: 6.5 s → 0.5 s; BASELINE.md)
+    * for a bit-identical result (same positions, same joiner, tokens are
     * non-null by construction). element_at() is NOT the lookup to
     * use: its ANSI bounds machinery ran 25× slower than the plain
     * 0-based GetArrayItem extraction (`tk[i]`) this builds.
@@ -112,7 +112,7 @@ object Codecs {
     * reference — pass an inlined `tokens(text)` and the row
     * re-tokenizes n+2 times (no common-subexpression rescue; CSE
     * does not reach inside HOF lambdas) — measured ~20× on the
-    * sf0.1 corpus scan (graft.tools.ProbeKn). A pre-projected
+    * sf0.1 corpus scan (BASELINE.md). A pre-projected
     * column reference is shared, and CollapseProject declines to
     * inline it back precisely because it is multi-referenced.
     * Streaming gates that inline it accept the constant factor on

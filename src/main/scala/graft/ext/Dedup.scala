@@ -427,18 +427,9 @@ object Dedup {
     * same per-bucket bound as the others. */
   def simhashPairs(fps: DataFrame, maxHamming: Int, bits: Int,
       bandBits: Int): DataFrame = {
-    val nSeg = maxHamming + 1
     require(bandBits <= bits, s"bandBits $bandBits must be <= bits $bits")
-    require(nSeg <= bandBits,
-      s"need at least one bit per segment ($nSeg segments, $bandBits banded bits)")
-    val bounds = (0 to nSeg).map(i => i * bandBits / nSeg)
-    val segs = (0 until nSeg).map { s =>
-      val lo = bounds(s); val w = bounds(s + 1) - lo
-      val mask = if (w >= 64) -1L else (1L << w) - 1
-      struct(lit(s).as("seg"),
-        shiftright(col("simhash"), lo).bitwiseAND(lit(mask)).as("segval"))
-    }
-    val banded = fps.select(col("doc_id"), col("simhash"), explode(array(segs: _*)).as("b"))
+    val banded = fps.select(col("doc_id"), col("simhash"),
+        explode(array(bandSegments(bandBits, maxHamming): _*)).as("b"))
       .select(col("doc_id"), col("simhash"), col("b.seg").as("seg"), col("b.segval").as("segval"))
     banded.as("a").join(banded.as("b"),
         col("a.seg") === col("b.seg") && col("a.segval") === col("b.segval") &&
@@ -447,6 +438,24 @@ object Dedup {
         expr("bit_count(a.simhash ^ b.simhash)").cast("int").as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .distinct() // a close pair may agree on several segments
+  }
+
+  /** The pigeonhole segments of [[simhashPairs]]: the lowest
+    * `bandBits` bits of `simhash` cut into maxHamming+1 contiguous
+    * ranges, each a `struct(seg, segval)` — the band self-join key.
+    * Shared by both band joins and by BandHistSpec, which pins the
+    * per-key bucket sizes these keys produce. */
+  private[graft] def bandSegments(bandBits: Int, maxHamming: Int): Seq[Column] = {
+    val nSeg = maxHamming + 1
+    require(nSeg <= bandBits,
+      s"need at least one bit per segment ($nSeg segments, $bandBits banded bits)")
+    val bounds = (0 to nSeg).map(i => i * bandBits / nSeg)
+    (0 until nSeg).map { s =>
+      val lo = bounds(s); val w = bounds(s + 1) - lo
+      val mask = if (w >= 64) -1L else (1L << w) - 1
+      struct(lit(s).as("seg"),
+        shiftright(col("simhash"), lo).bitwiseAND(lit(mask)).as("segval"))
+    }
   }
 
   /** [[simhashPairs]] with a BUCKET CAP — the gram-join df-cap dial
@@ -466,16 +475,8 @@ object Dedup {
   def simhashPairsCapped(fps: DataFrame, maxHamming: Int, bits: Int,
       maxBucket: Long): DataFrame = {
     require(maxBucket >= 2, s"maxBucket must be >= 2, got $maxBucket")
-    val nSeg = maxHamming + 1
-    require(nSeg <= bits, s"need at least one bit per segment ($nSeg segments, $bits bits)")
-    val bounds = (0 to nSeg).map(i => i * bits / nSeg)
-    val segs = (0 until nSeg).map { s =>
-      val lo = bounds(s); val w = bounds(s + 1) - lo
-      val mask = if (w >= 64) -1L else (1L << w) - 1
-      struct(lit(s).as("seg"),
-        shiftright(col("simhash"), lo).bitwiseAND(lit(mask)).as("segval"))
-    }
-    val banded = fps.select(col("doc_id"), col("simhash"), explode(array(segs: _*)).as("b"))
+    val banded = fps.select(col("doc_id"), col("simhash"),
+        explode(array(bandSegments(bits, maxHamming): _*)).as("b"))
       .select(col("doc_id"), col("simhash"), col("b.seg").as("seg"), col("b.segval").as("segval"))
     val kept = banded.join(
       banded.groupBy(col("seg"), col("segval"))

@@ -50,6 +50,12 @@ case class ByteWindowHash(child: Expression, width: Int) extends UnaryExpression
 }
 
 object ByteWindowHash {
+  /** Width of every window hash: the leading 56 bits of the md5
+    * digest. A SimHash voted from these hashes has bits 56-63 zero on
+    * every row, so its band joins band only the low `HashBits` bits
+    * (m_media_neardup). */
+  final val HashBits = 56
+
   private val HEX = "0123456789ABCDEF".getBytes("US-ASCII")
   // one digest instance per task thread — getInstance per row would
   // dominate the loop it exists to remove
@@ -79,7 +85,7 @@ object ByteWindowHash {
       val d = md.digest(buf)
       var v = 0L
       var k = 0
-      while (k < 7) { v = (v << 8) | (d(k) & 0xffL); k += 1 }
+      while (k < HashBits / 8) { v = (v << 8) | (d(k) & 0xffL); k += 1 }
       out(i) = v
       i += 1
     }

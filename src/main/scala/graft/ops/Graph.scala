@@ -120,7 +120,7 @@ object Graph {
     * sf0.1/local[32] purely from `iters` serial job barriers. Set
     * `checkpointEvery` > 0 for iteration counts large enough that
     * plan size itself becomes the problem (~dozens); the r13 cadence
-    * probe (tools/ProbeIterate.scala) measured checkpointEvery=2 at
+    * probe (docs/SCALE.md, round 13) measured checkpointEvery=2 at
     * 2.60 s vs 1.94 s for the single deep job at 5 steps — the
     * intermediate materialization is a pure loss until plan size
     * dominates.

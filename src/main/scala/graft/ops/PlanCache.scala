@@ -85,103 +85,6 @@ object PlanCache {
       build: => DataFrame): DataFrame =
     entry("ck:" + tag, key, spark)(build.localCheckpoint())
 
-  /** Opt-in PARQUET-BACKED substrate tier — the cross-session form of
-    * [[cachedBy]]. Every in-memory substrate (shingle/winnow/DSIR/
-    * graph statics, ~56-60 s of prepare) dies with its driver; at
-    * 100 TB these are build-once tables a restarted driver must reuse,
-    * not rebuild (the reference keeps its state durable in Kafka
-    * topics — docker-compose.yml:17 — and a production lake keeps it
-    * in bucketed tables, exactly what p_bucket_advisor recommends).
-    *
-    * Layout: `<dirRoot>/<tag>/` holds the parquet, hash-clustered into
-    * `buckets` files on `bucketCol` (repartition + sortWithinPartitions
-    * — the path-based analogue of a bucketed table: co-located,
-    * sorted-within-file scans; true catalog bucketing needs a
-    * metastore table, which would not survive this in-memory catalog).
-    * `<dirRoot>/<tag>.fingerprint` records a digest of the caller's
-    * source `fingerprint` (see [[sourceFingerprint]]).
-    *
-    * Staleness is checked LOUDLY: a fingerprint mismatch (source files
-    * changed since the substrate was written) logs the stale/fresh
-    * digests to stderr and REBUILDS — it never silently serves bytes
-    * derived from old inputs, and never silently trusts a directory
-    * with no sidecar. A fresh hit reads the stored bytes verbatim, so
-    * two sessions over the same sources serve byte-identical rows
-    * (spec-pinned, PersistedTierSpec). Within one session the scan
-    * frame is memoized through the same [[entry]] map as the memory
-    * tiers.
-    *
-    * Writer exclusion: the check-and-build runs under a per-(dir,
-    * tag) JVM monitor with the sidecar RE-checked inside the lock
-    * (double-checked), so two sessions in one driver that race a
-    * missing/stale substrate serialize — the second finds the first's
-    * sidecar and reuses instead of overwriting its files mid-scan.
-    * ACROSS drivers the contract is single-writer-per-substrate-dir
-    * (the deployment that builds substrates owns the dir; readers are
-    * always safe) — plain parquet has no cross-process commit
-    * protocol, which is exactly what a transactional lake format adds
-    * at 100 TB. */
-  def persisted(dirRoot: String, tag: String, fingerprint: String,
-      spark: org.apache.spark.sql.SparkSession, bucketCol: String, buckets: Int)(
-      build: => DataFrame): DataFrame = {
-    require(tag.matches("[A-Za-z0-9_\\-]+"),
-      s"substrate tag must be [A-Za-z0-9_-]+ (it names a directory): '$tag'")
-    require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-    val fp = digest(fingerprint)
-    // the FULL digest rides in the entry tag — keying on fp.hashCode
-    // would truncate 96 bits to 32 and let two fingerprints of one tag
-    // silently share a memoized frame (the collision the digest width
-    // was chosen to exclude; ADVICE r13)
-    entry("pq:" + tag + ":" + fp, 0, spark) {
-      val dataDir = new java.io.File(dirRoot, tag)
-      val metaFile = new java.io.File(dirRoot, tag + ".fingerprint")
-      def stored: Option[String] =
-        try Some(new String(java.nio.file.Files.readAllBytes(metaFile.toPath), "UTF-8").trim)
-        catch { case _: Throwable => None }
-      buildLocks.getOrElseUpdate(
-          new java.io.File(dirRoot, tag).getAbsolutePath, new Object).synchronized {
-        // re-check INSIDE the lock: a concurrent session may have just
-        // finished the identical build while this one was blocked
-        val st = stored
-        if (!st.contains(fp) || !dataDir.isDirectory) {
-          st.filter(_ != fp).foreach(old => System.err.println(
-            s"[PlanCache] STALE persisted substrate '$tag': stored fingerprint $old != " +
-              s"source $fp — rebuilding from the current sources"))
-          new java.io.File(dirRoot).mkdirs()
-          build.repartition(buckets, org.apache.spark.sql.functions.col(bucketCol))
-            .sortWithinPartitions(bucketCol)
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(dataDir.getPath)
-          // sidecar written AFTER the data commit: a crash mid-write
-          // leaves a missing/old fingerprint, which reads as stale and
-          // rebuilds — never a fresh-looking half-written substrate
-          java.nio.file.Files.write(metaFile.toPath, fp.getBytes("UTF-8"))
-          ()
-        }
-      }
-      spark.read.parquet(dataDir.getPath)
-    }
-  }
-
-  /** Per-substrate-path build monitors for [[persisted]]. */
-  private val buildLocks = TrieMap.empty[String, Object]
-
-  /** Source fingerprint for [[persisted]]: name+size+mtime of every
-    * file under `paths` (recursing into directories), order-stable.
-    * Catches the staleness a plan hash cannot — same query plan over
-    * CHANGED files. Size+mtime is the rsync-level contract: content
-    * hashing 100 TB to validate a cache would cost more than the
-    * rebuild. */
-  def sourceFingerprint(paths: Seq[String]): String = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq.flatMap(walk)
-      else Seq(f)
-    paths.sorted.flatMap(p => walk(new java.io.File(p)))
-      .map(f => s"${f.getPath}:${f.length}:${f.lastModified}")
-      .sorted.mkString("\n")
-  }
-
   private def entry(tag: String, key: Int, spark: org.apache.spark.sql.SparkSession)(
       materialize: => DataFrame): DataFrame = {
     // sweep only SETTLED holders: forcing an in-flight one here would

@@ -2,7 +2,6 @@ package graft.streaming
 
 import java.nio.file.Files
 import java.sql.Timestamp
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.codec.Codecs
@@ -14,16 +13,9 @@ import graft.model.{Header, RawRecord}
   * each sink. Usage: `sbt "runMain graft.streaming.PipelineDemo"`. */
 object PipelineDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // fail loudly if any generated code does not compile — silent
-      // interpreted fallback masks doGenCode bugs
-      .config("spark.sql.codegen.fallback", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // fail loudly if any generated code does not compile — silent
+    // interpreted fallback masks doGenCode bugs
+    val spark = graft.GraftSession.build(_.config("spark.sql.codegen.fallback", "false"))
     import spark.implicits._
 
     def be(i: Int) = Array(((i >> 24) & 0xff).toByte, ((i >> 16) & 0xff).toByte,

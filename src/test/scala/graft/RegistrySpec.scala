@@ -80,13 +80,36 @@ class RegistrySpec extends SparkSpec {
   test("cpuStat/stealPct bracket host steal plausibly on this platform") {
     val a = Bench.cpuStat()
     assert(a._1 > 0 && a._2 >= 0 && a._2 <= a._1, s"cpuStat = $a")
+    assert(a._3 >= 0 && a._3 <= a._1, s"cpuStat iowait = $a")
     Thread.sleep(200)
     val b = Bench.cpuStat()
     val s = Bench.stealPct(a, b)
     assert(s >= 0.0 && s <= 100.0, s"stealPct = $s")
+    val io = Bench.iowaitPct(a, b)
+    assert(io >= 0.0 && io <= 100.0, s"iowaitPct = $io")
     // degenerate brackets report -1, never NaN/Infinity (the JSON line)
     assert(Bench.stealPct(a, a) === -1.0)
-    assert(Bench.stealPct((-1L, 0L), b) === -1.0)
+    assert(Bench.stealPct((-1L, 0L, 0L), b) === -1.0)
+    assert(Bench.iowaitPct(a, a) === -1.0)
+    assert(Bench.iowaitPct((-1L, 0L, 0L), b) === -1.0)
+  }
+
+  test("only GraftSession builds a SparkSession in main code") {
+    // one session factory keeps Bench, Verify and the tests on one conf;
+    // scaladoc examples (`* SparkSession.builder()`) are not calls
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.size > 50, s"walked ${files.size} files under $root")
+    val builders = files.flatMap { f =>
+      java.nio.file.Files.readAllLines(f).asScala.collect {
+        case line if line.contains("SparkSession.builder()") &&
+            !line.trim.startsWith("*") && !line.trim.startsWith("//") =>
+          root.relativize(f).toString
+      }
+    }
+    assert(builders === Seq("graft/GraftSession.scala"), builders.mkString(", "))
   }
 
   test("the spin probe is a plausible fixed-work timing") {

@@ -92,10 +92,12 @@ class WideningPinsSpec extends SparkSpec {
         explode(graft.functions.ByteWindowHash.byteWindowHash(
           col("text").cast("binary"), 4)).as("h"))
     val sim = Dedup.simhashOfHashes(fps, 64)
-    assert(sim.agg(max("simhash")).head().getLong(0) < (1L << 56),
+    assert(sim.agg(max("simhash")).head().getLong(0) <
+      (1L << graft.functions.ByteWindowHash.HashBits),
       "bits 56-63 must be structurally zero for the 56-bit banding")
     assert(sim.agg(min("simhash")).head().getLong(0) >= 0L)
-    val banded = Dedup.simhashPairs(sim, 8, bits = 64, bandBits = 56)
+    val banded = Dedup.simhashPairs(sim, 8, bits = 64,
+      bandBits = graft.functions.ByteWindowHash.HashBits)
       .select("doc_a", "doc_b", "hamming").as[(Long, Long, Int)]
       .collect().toSet
     val exhaustive = Dedup.simhashPairsExhaustive(sim, 8)
