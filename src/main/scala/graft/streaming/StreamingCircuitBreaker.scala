@@ -31,7 +31,9 @@ object StreamingCircuitBreaker {
   case class Decision(key: String, ts_us: Long, call_id: Long,
       state: String, admitted: Boolean)
 
-  private case class Machine(state: Int, consecFails: Long, tripTsUs: Long)
+  /** Per-key state (public: the state encoder's codegen cannot see
+    * private classes). */
+  case class Machine(state: Int, consecFails: Long, tripTsUs: Long)
   private val Closed = 0; private val Open = 1
 
   def breaker(calls: Dataset[Call], failThreshold: Int, cooldownUs: Long)

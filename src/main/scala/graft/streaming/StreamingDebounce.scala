@@ -37,7 +37,9 @@ object StreamingDebounce {
   case class Verdict(key: String, ts_us: Long, event_id: Long,
       admitted: Boolean, since_admit_us: Long)
 
-  private case class Clock(lastSeenUs: Long, lastAdmitUs: Long)
+  /** Per-key state (public: the state encoder's codegen cannot see
+    * private classes). */
+  case class Clock(lastSeenUs: Long, lastAdmitUs: Long)
 
   def debounce(events: Dataset[Ev], gapUs: Long): Dataset[Verdict] = {
     require(gapUs >= 1L, s"gapUs must be >= 1, got $gapUs")

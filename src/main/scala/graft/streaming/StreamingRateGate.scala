@@ -32,7 +32,9 @@ object StreamingRateGate {
   case class Verdict(key: String, ts_us: Long, req_id: Long,
       admitted: Boolean, tokens_e6_after: Long)
 
-  private case class Bucket(tokensE6: Long, lastTsUs: Long)
+  /** Per-key state (public: the state encoder's codegen cannot see
+    * private classes). */
+  case class Bucket(tokensE6: Long, lastTsUs: Long)
 
   def gate(reqs: Dataset[Req], capacity: Long, ratePerSec: Long)
       : Dataset[Verdict] = {

@@ -4,6 +4,9 @@ import java.io.File
 import java.nio.file.Files
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException, Trigger}
 import graft.model.{Header, RawRecord}
@@ -183,5 +186,44 @@ class StreamingFanoutSpec extends SparkSpec {
 
   test("a failing concurrent sink fails the batch after its siblings return; it is re-delivered") {
     failAndRestart("spans")
+  }
+
+  test("parquet sinks and the checkpoint logs start no process; files stay 0644, dirs 0755") {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[RawRecord]
+    val root = Files.createTempDirectory("fanout-fork")
+    val sinkDirs = Names.map(n => root.resolve(n))
+    // a process that names this dir shows the recording sees process starts
+    val probe = Files.createTempDirectory("fanout-fork-probe").toString
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try {
+      val sinks = sinkDirs.map(d => Pipeline.parquetSink(d.toString))
+      val q = Pipeline.start(input.toDF(), sinks(0), sinks(1), sinks(2), sinks(3),
+        root.resolve("ckpt").toString, Trigger.ProcessingTime(0L))
+      try (0 until 3).foreach { t =>
+        input.addData(records(10 * t, 10))
+        q.processAllAvailable()
+      } finally q.stop()
+      assert(q.lastProgress.batchId === 2L)
+      new ProcessBuilder("ls", probe).start().waitFor()
+    } finally rec.stop()
+    val dump = Files.createTempFile("fanout-fork", ".jfr")
+    rec.dump(dump)
+    rec.close()
+    val commands = RecordingFile.readAllEvents(dump).asScala
+      .filter(_.getEventType.getName == "jdk.ProcessStart").map(_.getString("command")).toSeq
+    assert(commands.exists(_.contains(probe)), s"the recording must see process starts: $commands")
+    val forked = commands.filter(_.contains(root.toString))
+    assert(forked.isEmpty, s"${forked.size} processes named the sink or checkpoint dirs: ${forked.take(5)}")
+
+    def mode(p: java.nio.file.Path): Int = Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff
+    val entries = sinkDirs.flatMap(d => Files.walk(d).iterator().asScala.toSeq)
+    assert(entries.exists(_.getFileName.toString.startsWith("part-")))
+    entries.foreach { p =>
+      val expected = if (Files.isDirectory(p)) "755" else "644"
+      assert(Integer.toOctalString(mode(p)) === expected, p)
+    }
   }
 }
