@@ -1,6 +1,9 @@
 package graft.ops
 
+import java.nio.file.Files
+import java.nio.file.attribute.BasicFileAttributes
 import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
@@ -12,6 +15,21 @@ import org.apache.spark.storage.StorageLevel
   * plan semantic hash, tag): session-scoped so a cached frame can
   * never outlive its SparkContext, semantic so two structurally-equal
   * derivations share one persisted copy.
+  *
+  * Three tiers share one map, one exactly-once holder and one
+  * eviction:
+  *  - [[cachedBy]] / [[cached]] persist a derived frame;
+  *  - [[checkpointed]] localCheckpoints one;
+  *  - [[relation]] persists nothing: it memoizes a base relation (a
+  *    `spark.read.parquet` frame) so its schema inference, a Spark
+  *    job, runs once per session and file stamp instead of per build.
+  *
+  * Key rule: a plan that holds a Scala closure (a typed
+  * `groupByKey`/`mapGroups` lambda, a per-call `udf`) never hashes
+  * equal across builds, because each build makes a new closure object.
+  * [[cached]] on such a plan misses every time and persists one more
+  * copy per build. Key it by its closure-free INPUT with [[cachedBy]]
+  * instead; the derivation then also runs only on a miss.
   *
   * Scale note: on a cluster this is the "staging table" step — at
   * 100 TB the same call site writes a bucketed intermediate instead of
@@ -85,6 +103,55 @@ object PlanCache {
       build: => DataFrame): DataFrame =
     entry("ck:" + tag, key, spark)(build.localCheckpoint())
 
+  /** Base-relation tier: `build` (a file read) runs once per session,
+    * path and file stamp, and the frame is NOT persisted — only its
+    * resolved plan (inferred schema, file listing) is reused, so a
+    * later build over it submits no schema-inference job.
+    *
+    * The stamp is a `java.nio` stat, taken with no Spark job: the
+    * modification time at full precision, the size and the inode
+    * (`fileKey`, where the platform has one) of the file, or of every
+    * file under it for a directory. A file rewritten in place under the
+    * same path therefore gets a fresh read, and the superseded stamp's
+    * entry is dropped. A path that is not on the local file system, or
+    * does not exist, is not memoized: `build` runs on every call.
+    * Frames DERIVED from the relation keep the plan-keyed staleness
+    * contract of [[cachedBy]]. */
+  def relation(path: String, spark: org.apache.spark.sql.SparkSession)(
+      build: => DataFrame): DataFrame =
+    stamp(path, spark) match {
+      case None => build
+      case Some(st) =>
+        // NUL cannot occur in a path, so the prefix names this path only
+        val prefix = "rel:" + path + "\u0000"
+        val tag = prefix + st
+        val session = sessionKey(spark)
+        cache.filterInPlace { case ((sk, _, t), _) =>
+          !(sk == session && t.startsWith(prefix) && t != tag) }
+        entry(tag, 0, spark)(build)
+    }
+
+  private def stamp(path: String, spark: org.apache.spark.sql.SparkSession): Option[String] = {
+    val uri = new org.apache.hadoop.fs.Path(path).toUri
+    val scheme = Option(uri.getScheme).getOrElse(
+      org.apache.hadoop.fs.FileSystem.getDefaultUri(spark.sparkContext.hadoopConfiguration).getScheme)
+    val local = java.nio.file.Paths.get(uri.getPath)
+    if (scheme != "file" || !Files.exists(local)) None
+    else {
+      def one(p: java.nio.file.Path): String = {
+        val a = Files.readAttributes(p, classOf[BasicFileAttributes])
+        s"${local.relativize(p)}|${a.lastModifiedTime.toInstant}|${a.size}|${a.fileKey}"
+      }
+      val walk = Files.walk(local)
+      val files = try walk.iterator.asScala.filter(Files.isRegularFile(_)).toSeq.sorted
+        finally walk.close()
+      Some(digest(files.map(one).mkString("\n")))
+    }
+  }
+
+  private def sessionKey(spark: org.apache.spark.sql.SparkSession): String =
+    spark.sparkContext.applicationId + "/" + System.identityHashCode(spark)
+
   private def entry(tag: String, key: Int, spark: org.apache.spark.sql.SparkSession)(
       materialize: => DataFrame): DataFrame = {
     // sweep only SETTLED holders: forcing an in-flight one here would
@@ -102,7 +169,7 @@ object PlanCache {
       })
       true
     })
-    val k = (appId + "/" + System.identityHashCode(spark), key, tag)
+    val k = (sessionKey(spark), key, tag)
     val holder = cache.getOrElseUpdate(k, new Once(() => materialize))
     try {
       val df = holder.df
