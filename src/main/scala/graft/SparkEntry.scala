@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.codec.Codecs
-import graft.ops.{ContextOps => C, TraceAnalytics}
+import graft.ops.{ContextOps => C, PlanCache, TraceAnalytics}
 import graft.ext.{Dedup, Multimodal, Similarity, TextOps}
 
 /** Driver contract (SURVEY.md §7): one entry per implemented operator,
@@ -28,7 +28,7 @@ object SparkEntry {
     * decoded type and normalize, so the same build runs either.
     *
     * Each table is read once per session and file stamp through
-    * [[graft.ops.PlanCache.relation]]: parquet schema inference is a
+    * [[PlanCache.relation]]: parquet schema inference is a
     * Spark job, and without the memo every registry build ran one. The
     * same frame comes back on every call, so frames keyed by its
     * semantic hash hit. The nanos flag is still set on every events
@@ -37,7 +37,7 @@ object SparkEntry {
     val path = s"$dir/$name.parquet"
     if (name == "events") {
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      graft.ops.PlanCache.relation(path, s) {
+      PlanCache.relation(path, s) {
         val raw = s.read.parquet(path)
         raw.schema("ts").dataType match {
           case org.apache.spark.sql.types.LongType =>
@@ -45,16 +45,8 @@ object SparkEntry {
           case _ => raw.withColumn("ts", col("ts").cast("timestamp"))
         }
       }
-    } else graft.ops.PlanCache.relation(path, s)(s.read.parquet(path))
+    } else PlanCache.relation(path, s)(s.read.parquet(path))
   }
-
-  /** `PlanCache.cachedBy` keyed by the semantic hash of `input`, the
-    * closure-free frame `derive` is built from: the derivation is then
-    * built only on a miss, and a derivation holding a closure (whose own
-    * plan never hashes equal across builds) still hits. */
-  private def cachedOn(tag: String, input: DataFrame)(derive: => DataFrame): DataFrame =
-    graft.ops.PlanCache.cachedBy(tag, input.queryExecution.logical.semanticHash(),
-      input.sparkSession)(derive)
 
   /** events → decoded + context-enriched records (batch analog of the
     * reference's `numbers` topic — FIXTURES.md §B). Materialized once
@@ -62,7 +54,7 @@ object SparkEntry {
     * q_log_correlation share it. */
   private def rec(s: SparkSession, dir: String): DataFrame = {
     val ev = T(s, dir, "events")
-    cachedOn("rec", ev)(C.setBaggage(C.enrichEvents(ev)))
+    PlanCache.cached("rec", ev)(C.setBaggage(C.enrichEvents(ev)))
   }
 
   /** Flagship: trace-correlated even-branch records joined to their log
@@ -198,8 +190,8 @@ object SparkEntry {
     "bpe_vocab" ->
       ((s, dir) => { val (occ, enc) = bpeEncoded(s, dir); occ.count(); enc.count(); () }),
     // kept-corpus DSIR weight tables: the curation DAGs train K=3
-    // weights over their OWN kept corpora, which are plan-keyed cache
-    // entries DISTINCT from dsir_multi3's full-corpus one — without
+    // weights over their OWN kept corpora, whose cache entries are
+    // DISTINCT from dsir_multi3's full-corpus one — without
     // these steps the whole per-DAG shingle+bucket build lands inside
     // the query timing, and under ambient load that family inflated
     // 4-8x in the round-11 official run (the decontam/DSIR
@@ -307,7 +299,7 @@ object SparkEntry {
     * the identical tree. Shared by both queries via PlanCache. */
   private def spanTree(s: SparkSession, dir: String): DataFrame = {
     val events = T(s, dir, "events")
-    cachedOn("span-tree", events) {
+    PlanCache.cached("span-tree", events) {
       val ev = events
         .withColumn("trace_id", Codecs.traceIdFrom(col("user_id")))
         .withColumn("value_int", floor(col("value")))
@@ -344,7 +336,7 @@ object SparkEntry {
     * two. PlanCached — q_trace_anomaly scores over the same frame. */
   private def qCriticalPath(s: SparkSession, dir: String): DataFrame = {
     val tree = spanTree(s, dir)
-    cachedOn("crit-path", tree) {
+    PlanCache.cached("crit-path", tree) {
       val sizes = tree.groupBy("trace_id")
         .agg(count(lit(1)).as("n_spans"))
       qCriticalHops(s, dir).groupBy("trace_id")
@@ -366,7 +358,7 @@ object SparkEntry {
     * build, so the fold's plan never hashes equal twice. */
   private def qCriticalHops(s: SparkSession, dir: String): DataFrame = {
     val tree = spanTree(s, dir)
-    cachedOn("crit-hops", tree)(TraceAnalytics.criticalPathFold(tree, 3))
+    PlanCache.cached("crit-hops", tree)(TraceAnalytics.criticalPathFold(tree, 3))
   }
 
   /** Root-cause attribution: for each anomalously slow trace, the
@@ -849,7 +841,7 @@ object SparkEntry {
     val docs = T(s, dir, "documents")
     // the exploded token frame feeds BOTH the tf and the df legs —
     // materialize once or the corpus is tokenized twice per run
-    val toks = graft.ops.PlanCache.cached("tfidf-toks",
+    val toks = PlanCache.cached("tfidf-toks", docs)(
       docs.select(col("doc_id"), explode(Codecs.tokens(col("text"))).as("token")))
     val tf = toks.groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
     val dfreq = toks.distinct().groupBy("token").agg(count(lit(1)).as("df"))
@@ -985,17 +977,29 @@ object SparkEntry {
     * total arrives as ONE broadcast row, not a global window. */
   private def tMixWeights(s: SparkSession, dir: String): DataFrame = {
     val docs = T(s, dir, "documents")
-      .select(col("source"), col("lang"), TextOps.tokenCount(col("text")).cast("long").as("nt"))
     // corpus total folds over the (tiny) strata aggregate, so the
     // corpus is scanned and tokenized exactly once
-    val strata = graft.ops.PlanCache.cached("mix-strata",
-      docs.groupBy(col("source"), col("lang"))
+    val strata = PlanCache.cached("mix-strata", docs)(
+      docs.select(col("source"), col("lang"),
+          TextOps.tokenCount(col("text")).cast("long").as("nt"))
+        .groupBy(col("source"), col("lang"))
         .agg(count(lit(1)).as("n_docs"), sum(col("nt")).as("total_tokens")))
     val corpus = strata.agg(sum(col("total_tokens")).as("corpus_tokens"))
     strata.crossJoin(broadcast(corpus))
       .select(col("source"), col("lang"), col("n_docs"), col("total_tokens"),
         round(col("total_tokens").cast("double") / col("corpus_tokens"), 6).as("tok_share"))
   }
+
+  /** (doc_id, source, nt): each document's whitespace-token count. */
+  private def mixDocs(s: SparkSession, dir: String): DataFrame =
+    T(s, dir, "documents").select(col("doc_id"), col("source"),
+      TextOps.tokenCount(col("text")).cast("long").as("nt"))
+
+  /** Per-source token mass (source, src_tokens), shared by the
+    * mixture rebalance and the epoch schedule. */
+  private def mixBySource(s: SparkSession, dir: String): DataFrame =
+    PlanCache.cached("mix-bysource", T(s, dir, "documents"))(
+      mixDocs(s, dir).groupBy("source").agg(sum(col("nt")).as("src_tokens")))
 
   /** Mixture-rebalance plan + apply: a per-source sampling rate that
     * downsamples every source toward HALF the equal token share (the
@@ -1008,11 +1012,8 @@ object SparkEntry {
     * stage, the rate table rides as ONE broadcast, and the apply is
     * the same pushdown-friendly hash predicate the split queries use. */
   private def eMixApply(s: SparkSession, dir: String): DataFrame = {
-    val docs = T(s, dir, "documents")
-      .select(col("doc_id"), col("source"),
-        TextOps.tokenCount(col("text")).cast("long").as("nt"))
-    val bySource = graft.ops.PlanCache.cached("mix-bysource",
-      docs.groupBy("source").agg(sum(col("nt")).as("src_tokens")))
+    val docs = mixDocs(s, dir)
+    val bySource = mixBySource(s, dir)
     val corpus = bySource.agg(sum(col("src_tokens")).as("corpus_tokens"),
       count(lit(1)).as("n_sources"))
     // a source whose documents all tokenize to zero tokens would make
@@ -1050,12 +1051,7 @@ object SparkEntry {
     * is source-vocabulary-sized metadata. */
   private def eEpochSchedule(s: SparkSession, dir: String): DataFrame = {
     val budget = 100000L // declared token budget for the schedule
-    val docs = T(s, dir, "documents")
-      .select(col("doc_id"), col("source"),
-        TextOps.tokenCount(col("text")).cast("long").as("nt"))
-    val bySource = graft.ops.PlanCache.cached("mix-bysource",
-      docs.groupBy("source").agg(sum(col("nt")).as("src_tokens")))
-    val w = bySource
+    val w = mixBySource(s, dir)
       .withColumn("w", floor(sqrt(col("src_tokens").cast("double"))).cast("long"))
     val tot = w.agg(sum(col("w")).as("w_tot"))
     w.crossJoin(broadcast(tot))
@@ -1088,7 +1084,7 @@ object SparkEntry {
     val docs = T(s, dir, "documents")
     val merges = TextOps.bpeMerges(docs, 20)
     val enc = TextOps.bpeVocabEncoded(docs, merges)
-    val occ = graft.ops.PlanCache.cached("bpe-occ",
+    val occ = PlanCache.cached("bpe-occ", docs)(
       docs.select(col("doc_id"), explode(Codecs.tokens(col("text"))).as("tok"))
         .groupBy("doc_id", "tok").agg(count(lit(1)).as("cnt")))
     (occ, enc)
@@ -1128,7 +1124,7 @@ object SparkEntry {
     val (occ, enc) = bpeEncoded(s, dir)
     val sized = occ.join(broadcast(enc.select(col("tok"), col("n_sub"))), "tok")
       .groupBy("doc_id").agg(sum(col("n_sub") * col("cnt")).as("n_tok"))
-    TextOps.packSized(sized, 2048L, 100L, "packbpe")
+    TextOps.packSized(sized, 2048L, 100L, "packbpe", occ, enc)
   }
 
   /** Content-defined chunking (the rolling-hash boundary rule of
@@ -1194,15 +1190,12 @@ object SparkEntry {
     * recursive-CTE transitive closure — an independent algorithm). */
   /** The components frame shared by groups / apply / size-histogram —
     * PlanCache-materialized so the union-find (an eager pair collect)
-    * runs once per corpus, not once per consumer. MUST be the lazy
-    * [[graft.ops.PlanCache.cachedBy]] form (the purchaseCommunities
-    * lesson): nearDupComponents collects the pair graph eagerly at
-    * construction, so the by-value overload re-ran the collect on
-    * every consumer before even consulting the cache. */
+    * runs once per corpus, not once per consumer. nearDupComponents
+    * collects the pair graph eagerly at construction, which
+    * [[PlanCache.cached]] runs only on a miss. */
   private def nearDupComps(s: SparkSession, dir: String): DataFrame = {
     val docs = T(s, dir, "documents")
-    graft.ops.PlanCache.cachedBy("neardup-comps",
-        docs.queryExecution.logical.semanticHash(), s) {
+    PlanCache.cached("neardup-comps", docs) {
       val pairs = Dedup.lshVerifiedJaccard(docs, 3, 16, 4, 4, 0.5)
         .select("doc_a", "doc_b")
       Dedup.nearDupComponents(docs.select("doc_id"), pairs)
@@ -2083,10 +2076,11 @@ object SparkEntry {
     * newly-arrived batch, probed against the rest of the corpus's band
     * index ([[graft.ext.Dedup.incrementalNearDups]]). PlanCached —
     * the apply form consumes the same pair frame. */
-  private def dIncrementalDedup(s: SparkSession, dir: String): DataFrame =
-    graft.ops.PlanCache.cached("incr-neardups",
-      Dedup.incrementalNearDups(T(s, dir, "documents"),
-        col("doc_id") % 10 === 0, 3, 16, 4, 4, 0.5))
+  private def dIncrementalDedup(s: SparkSession, dir: String): DataFrame = {
+    val docs = T(s, dir, "documents")
+    PlanCache.cached("incr-neardups", docs)(
+      Dedup.incrementalNearDups(docs, col("doc_id") % 10 === 0, 3, 16, 4, 4, 0.5))
+  }
 
   /** Admission decision for the incoming batch — the apply form of the
     * incremental check: batch docs with NO corpus near-dup are
@@ -2168,7 +2162,7 @@ object SparkEntry {
     // gated feeds three consumers (attrs, packing's cumsum, packing's
     // offsets) — materialize once via PlanCache, same as every other
     // shared derived frame
-    val gated = graft.ops.PlanCache.cached("curation-gated",
+    val gated = PlanCache.cached("curation-gated", T(s, dir, "documents"))(
       docs.join(keepers, "doc_id")
         .withColumn("quality", round(TextOps.qualityScore(col("text")), 4))
         .withColumn("n_tok", TextOps.tokenCount(col("text")).cast("long"))
@@ -2186,10 +2180,11 @@ object SparkEntry {
     * all read the rebuilt text, and the prepare phase attributes the
     * posexplode+cover build to the curation_rebuilt line instead of
     * whichever consumer times first. */
-  private def rebuiltDocs(s: SparkSession, dir: String): DataFrame =
-    graft.ops.PlanCache.cached("curation-rebuilt",
-      repetitionApply(T(s, dir, "documents"))
-        .select(col("doc_id"), col("n_kept"), col("dedup_text")))
+  private def rebuiltDocs(s: SparkSession, dir: String): DataFrame = {
+    val docs = T(s, dir, "documents")
+    PlanCache.cached("curation-rebuilt", docs)(
+      repetitionApply(docs).select(col("doc_id"), col("n_kept"), col("dedup_text")))
+  }
 
   /** The kept-corpus-with-ALL-gates row — [[eCurationPipeline]] plus
     * the two round-12 gates composed in the order a real run chains
@@ -2362,8 +2357,7 @@ object SparkEntry {
     * evaluation count, never rows — the a_basket_rules precedent). */
   private def annCached(tag: String, s: SparkSession, dir: String)(
       build: => DataFrame): DataFrame =
-    graft.ops.PlanCache.cachedBy(s"ann-$tag",
-      T(s, dir, "embeddings").queryExecution.logical.semanticHash(), s)(build)
+    PlanCache.cached(s"ann-$tag", T(s, dir, "embeddings"))(build)
 
   private def sAnnBrute(s: SparkSession, dir: String): DataFrame =
     annCached("brute-5", s, dir)(
@@ -2576,13 +2570,13 @@ object SparkEntry {
     * (one payload pass, no hex-string round trip); bit-for-bit the
     * hex().substr().portableHash composition the oracle recomputes. */
   private[graft] def mediaFps(s: SparkSession, dir: String): DataFrame =
-    graft.ops.PlanCache.cached("media-fps-4-64", {
+    PlanCache.cached("media-fps-4-64", T(s, dir, "documents")) {
       val grams = T(s, dir, "documents")
         .select(col("doc_id"),
           explode(graft.functions.ByteWindowHash.byteWindowHash(
             col("text").cast("binary"), 4)).as("h"))
       Dedup.simhashOfHashes(grams, 64)
-    })
+    }
 
   private def mMediaNearDup(s: SparkSession, dir: String): DataFrame =
     // bandBits = HashBits (56): the fingerprint's voters are 56-bit
@@ -2603,13 +2597,10 @@ object SparkEntry {
     * the decontam-keepers / purchaseCommunities discipline. The r12
     * official bench caught the old inline form inflating 6.2× under
     * ambient load (9.07 s vs the 1.47 s quiet band) because the label
-    * build re-ran per call. MUST stay the lazy [[graft.ops.PlanCache
-    * .cachedBy]] overload: the by-value form would run the collect
-    * before consulting the cache. */
+    * build re-ran per call. */
   private def mediaComps(s: SparkSession, dir: String): DataFrame = {
     val docs = T(s, dir, "documents")
-    graft.ops.PlanCache.cachedBy("media-comps",
-        docs.queryExecution.logical.semanticHash(), s) {
+    PlanCache.cached("media-comps", docs) {
       Dedup.nearDupComponents(docs.select("doc_id"),
         mMediaNearDup(s, dir).select("doc_a", "doc_b"))
     }
@@ -2643,9 +2634,10 @@ object SparkEntry {
   /** The winnowing fingerprint index, materialized once — shared by
     * t_winnow and d_winnow_pairs (and charged to the winnow_index
     * prepare step in the bench). */
-  private[graft] def winnowIdx(s: SparkSession, dir: String): DataFrame =
-    graft.ops.PlanCache.cached("winnow-3-4",
-      TextOps.winnow(T(s, dir, "documents"), 3, 4))
+  private[graft] def winnowIdx(s: SparkSession, dir: String): DataFrame = {
+    val docs = T(s, dir, "documents")
+    PlanCache.cached("winnow-3-4", docs)(TextOps.winnow(docs, 3, 4))
+  }
 
   private def tWinnow(s: SparkSession, dir: String): DataFrame =
     winnowIdx(s, dir)
@@ -3009,19 +3001,14 @@ object SparkEntry {
     val train = docs
       .join(marks.filter(!col("is_eval")).select("doc_id"), "doc_id")
       .join(bad, Seq("doc_id"), "left_anti")
-    val trainIds = graft.ops.PlanCache.cached("decontam-train-ids",
-      train.select("doc_id"))
+    val trainIds = PlanCache.cached("decontam-train-ids", docs)(train.select("doc_id"))
     val tPairs = pairs
       .join(trainIds.select(col("doc_id").as("doc_a")), "doc_a")
       .join(trainIds.select(col("doc_id").as("doc_b")), "doc_b")
-    // cachedBy (lazy build): nearDupComponents runs its pair
-    // checkpoint + union-find collect at CONSTRUCTION, so the
-    // by-value form would re-run them on every call — with the
-    // registry share, the prepare step builds once and the query call
-    // only reads (the purchaseCommunities discipline)
-    val keepers = graft.ops.PlanCache.cachedBy("decontam-keepers",
-        trainIds.queryExecution.logical.semanticHash() * 31 +
-          tPairs.queryExecution.logical.semanticHash(), s) {
+    // nearDupComponents runs its pair checkpoint + union-find collect
+    // at CONSTRUCTION, so it must run only on a miss: the prepare step
+    // builds once and the query call only reads
+    val keepers = PlanCache.cached("decontam-keepers", trainIds, tPairs) {
       Dedup.nearDupComponents(trainIds, tPairs)
         .filter(col("doc_id") === col("group_id")).select("doc_id")
     }
@@ -3068,8 +3055,7 @@ object SparkEntry {
         Codecs.tokens(col("chunk_text")).as("tk"))
       .select(col("vec_id"),
         transform(col("tk"), t => pmod(Codecs.portableHash(t), lit(64L))).as("bins"))
-    val fv = graft.ops.PlanCache.cachedBy("chunk-fv-64",
-        binRows.queryExecution.logical.semanticHash(), s) {
+    val fv = PlanCache.cached("chunk-fv-64", T(s, dir, "documents")) {
       binRows.as[(Long, Array[Long])].mapPartitions { it =>
         it.map { case (id, bs) =>
           val hist = new Array[Double](64)
@@ -3107,7 +3093,7 @@ object SparkEntry {
     * both directions in a single pass over the aggregated pairs.
     * PlanCached — the rank query's 5 iterations all read it. */
   private def purchaseEdges(s: SparkSession, dir: String): DataFrame =
-    graft.ops.PlanCache.cached("purchase-edges", {
+    PlanCache.cached("purchase-edges", T(s, dir, "lineitem"), T(s, dir, "orders")) {
       val li = T(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
       val ord = T(s, dir, "orders")
         .select(col("o_orderkey").as("l_orderkey"), col("o_custkey"))
@@ -3120,7 +3106,7 @@ object SparkEntry {
           struct(concat(lit("s"), col("l_suppkey").cast("string")).as("src"),
             concat(lit("c"), col("o_custkey").cast("string")).as("dst"), col("w")))).as("e"))
         .select(col("e.src").as("src"), col("e.dst").as("dst"), col("e.w").as("w"))
-    })
+    }
 
   /** Weighted PageRank over the purchase graph — "which entities does
     * the trade network concentrate on" ([[graft.ops.Graph.pageRankFixed]]:
@@ -3292,14 +3278,14 @@ object SparkEntry {
   private def funnelStages(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
     val win = expr("INTERVAL 6 HOURS")
     val ev = T(s, dir, "events").select(col("user_id"), col("event_type"), col("ts"))
-    val s1 = graft.ops.PlanCache.cached("funnel-s1",
+    val s1 = PlanCache.cached("funnel-s1", T(s, dir, "events"))(
       ev.filter(col("event_type") === "view")
         .groupBy("user_id").agg(min("ts").as("t1")))
-    val s2 = graft.ops.PlanCache.cached("funnel-s2",
+    val s2 = PlanCache.cached("funnel-s2", T(s, dir, "events"))(
       ev.filter(col("event_type") === "click").join(s1, "user_id")
         .filter(col("ts") > col("t1") && col("ts") <= col("t1") + win)
         .groupBy("user_id").agg(min("ts").as("t2")))
-    val s3 = graft.ops.PlanCache.cached("funnel-s3",
+    val s3 = PlanCache.cached("funnel-s3", T(s, dir, "events"))(
       ev.filter(col("event_type") === "purchase").join(s2, "user_id")
         .filter(col("ts") > col("t2") && col("ts") <= col("t2") + win)
         .groupBy("user_id").agg(min("ts").as("t3")))
@@ -3358,8 +3344,9 @@ object SparkEntry {
     * (partial-agg'd, vocab-sized shuffle) + a 64-row TakeOrdered; the
     * exact count shares the distinct frame. */
   private def tKmvDistinct(s: SparkSession, dir: String): DataFrame = {
-    val vh = graft.ops.PlanCache.cached("kmv-vocab-hashes",
-      T(s, dir, "documents")
+    val docs = T(s, dir, "documents")
+    val vh = PlanCache.cached("kmv-vocab-hashes", docs)(
+      docs
         .select(explode(Codecs.tokens(col("text"))).as("t"))
         .select(Codecs.portableHash(col("t")).as("h")).distinct())
     val bottom = vh.orderBy(col("h")).limit(64).agg(max(col("h")).as("h_k"))
@@ -3406,7 +3393,7 @@ object SparkEntry {
       .select(col("user_id"), unix_micros(col("ts")).as("us"),
         round(col("value") * 1000).cast("long").as("v_fx"))
     val gmax = ev.agg(max(col("us")).as("g"))
-    val users = graft.ops.PlanCache.cached("rfm-users",
+    val users = PlanCache.cached("rfm-users", T(s, dir, "events"))(
       ev.groupBy("user_id")
         .agg(max(col("us")).as("last_us"), count(lit(1)).as("frequency"),
           sum(col("v_fx")).as("monetary_fx"))
@@ -4387,10 +4374,7 @@ object SparkEntry {
     // two registry rows consume this frame (the bigram top-k and the
     // trigram interpolation's lower-order model) — materialize once,
     // the bigram-lm convention
-    graft.ops.PlanCache.cachedBy("kn-bigram-probs",
-        occ.queryExecution.logical.semanticHash(), occ.sparkSession) {
-      kneserNeyProbsUncached(occ)
-    }
+    PlanCache.cached("kn-bigram-probs", occ)(kneserNeyProbsUncached(occ))
 
   private def kneserNeyProbsUncached(occ: DataFrame): DataFrame = {
     // aggregate on the raw shingle STRING first (map-side combine over
@@ -5115,14 +5099,14 @@ object SparkEntry {
     // degree-annotate both directions, then ONE group per document;
     // wout joins on (doc_id, src) before the collect so the array
     // carries everything the fold needs
-    val e2 = graft.ops.PlanCache.cached("textrank-doc-edges", {
+    val e2 = PlanCache.cached("textrank-doc-edges", T(s, dir, "documents")) {
       val e = und
         .select(col("doc_id"), col("a").as("src"), col("b").as("dst"), col("w"))
         .unionAll(und.select(col("doc_id"), col("b").as("src"),
           col("a").as("dst"), col("w")))
       e.join(e.groupBy("doc_id", "src").agg(sum("w").as("wout")),
         Seq("doc_id", "src"))
-    })
+    }
     val ranked = e2
       .groupBy("doc_id")
       .agg(collect_list(struct(col("src"), col("dst"), col("w"), col("wout")))
@@ -5323,7 +5307,7 @@ object SparkEntry {
     * user, then a vocabulary-bounded aggregate; PlanCache'd because
     * both stationary-distribution queries power-iterate over it. */
   private def markovMatrix(s: SparkSession, dir: String): DataFrame =
-    graft.ops.PlanCache.cached("markov-matrix-e6", {
+    PlanCache.cached("markov-matrix-e6", T(s, dir, "events")) {
       val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
       val trans = T(s, dir, "events")
         .withColumn("next_type", lead(col("event_type"), 1).over(w))
@@ -5334,7 +5318,7 @@ object SparkEntry {
       trans.join(tot, "from_type")
         .select(col("from_type"), col("to_type"),
           expr("n * 1000000 div tot").as("p_e6"))
-    })
+    }
 
   /** MASS-CONSERVING stationary distribution — closes the documented
     * [[aMarkovStationary]] caveat (sink states and e6 truncation both
@@ -5754,14 +5738,7 @@ object SparkEntry {
     * moves to the mirrored-double convention). One (source, token)
     * partial agg — the cached KL substrate — then a source rollup. */
   private def tSimpson(s: SparkSession, dir: String): DataFrame = {
-    val st = graft.ops.PlanCache.cachedBy("src-tok-counts",
-        T(s, dir, "documents").queryExecution.logical.semanticHash(),
-        s) {
-      T(s, dir, "documents")
-        .select(col("source"), explode(Codecs.tokens(col("text"))).as("t"))
-        .groupBy("source", "t").agg(count(lit(1)).as("c_st"))
-    }
-    st.groupBy("source").agg(
+    TextOps.sourceTokenCounts(T(s, dir, "documents")).groupBy("source").agg(
         sum(col("c_st")).as("n_tok"),
         sum(col("c_st") * (col("c_st") - 1)).as("coll"))
       .select(col("source"), col("n_tok"),
@@ -5853,14 +5830,15 @@ object SparkEntry {
     * 1-row broadcasts; all longs (Σw·10⁶ ≤ ~10¹², ×10⁶ still inside
     * 2⁶³). The oracle replays the identical four rounds unrolled. */
   private def gHits(s: SparkSession, dir: String): DataFrame = {
-    val e = graft.ops.PlanCache.cached("purchase-edges-directed", {
+    val e = PlanCache.cached("purchase-edges-directed",
+        T(s, dir, "lineitem"), T(s, dir, "orders")) {
       val li = T(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
       val ord = T(s, dir, "orders")
         .select(col("o_orderkey").as("l_orderkey"), col("o_custkey"))
       li.join(ord, "l_orderkey")
         .groupBy(col("o_custkey").as("c"), col("l_suppkey").as("p"))
         .agg(count(lit(1)).as("w"))
-    })
+    }
     var h = e.select(col("c")).distinct()
       .select(col("c"), lit(1000000L).as("h"))
     var a: DataFrame = null
@@ -5907,17 +5885,12 @@ object SparkEntry {
 
   /** Label-propagation communities over the purchase graph, PlanCached:
     * [[gCommunities]] returns the frame and [[gModularity]] scores it,
-    * so the 4-round iterate runs once per session. MUST be the lazy
-    * [[graft.ops.PlanCache.cachedBy]] form keyed on the edge frame:
-    * labelPropagation localCheckpoints its edge input EAGERLY at
-    * construction, so the by-value `cached(tag, df)` overload would
-    * re-run that job — and mint a fresh RDD scan, hence a fresh
-    * semanticHash and a guaranteed cache MISS — on every call
-    * (measured: g_modularity 6.99 s rebuilding vs reading the shared
-    * frame). */
+    * so the 4-round iterate runs once per session. labelPropagation
+    * localCheckpoints its edge input EAGERLY at construction; keyed on
+    * the edge frame, that job runs only on a miss (measured:
+    * g_modularity 6.99 s rebuilding vs reading the shared frame). */
   private def purchaseCommunities(s: SparkSession, dir: String): DataFrame =
-    graft.ops.PlanCache.cachedBy("purchase-communities",
-        purchaseEdges(s, dir).queryExecution.logical.semanticHash(), s) {
+    PlanCache.cached("purchase-communities", purchaseEdges(s, dir)) {
       graft.ops.Graph.labelPropagation(purchaseEdges(s, dir), 4)
     }
 

@@ -65,8 +65,7 @@ object Dedup {
     // Tokenize in a projection BELOW the explode so the split/filter
     // runs once per document, not once per reference inside the
     // shingle generator. Plan construction runs only on a cache miss.
-    graft.ops.PlanCache.cachedBy(s"shingles-$n-$hashName",
-        docs.queryExecution.logical.semanticHash(), docs.sparkSession) {
+    graft.ops.PlanCache.cached(s"shingles-$n-$hashName", docs) {
       spread(docs).select(col("doc_id"), tokens(col("text")).as("tk"))
         .select(col("doc_id"), explode(array_distinct(shingles(col("tk"), n))).as("sh"))
         .select(col("doc_id"), hashFn(hashName)(col("sh")).as("h"))
@@ -103,8 +102,7 @@ object Dedup {
     val sh = cap match {
       case DfCap.ExhaustiveOracle => shRaw
       case DfCap.Capped(maxDf) =>
-        graft.ops.PlanCache.cachedBy(s"$cacheTag-capped-$maxDf",
-            shRaw.queryExecution.logical.semanticHash(), shRaw.sparkSession) {
+        graft.ops.PlanCache.cached(s"$cacheTag-capped-$maxDf", shRaw) {
           val rare = shRaw.groupBy("h").agg(count(lit(1)).as("df"))
             .filter(col("df") <= maxDf).select("h")
           shRaw.join(rare, Seq("h"), "left_semi")
@@ -166,14 +164,13 @@ object Dedup {
     * instead of k wide codegen'd min() aggregates (identical values;
     * the shuffle still carries exactly k longs per doc). */
   def minhashSignatures(docs: DataFrame, n: Int, k: Int,
-      hashName: String = "md5"): DataFrame = {
-    val sh = shingleHashes(docs, n, hashName)
-    val sig = sh.groupBy("doc_id")
-      .agg(graft.functions.MinHashSketch.minhashSketch(col("h"), k).as("mh"))
-    val cols = col("doc_id") +:
-      (0 until k).map(i => element_at(col("mh"), i + 1).as(s"mh$i"))
-    graft.ops.PlanCache.cached(s"minhash-$n-$k-$hashName", sig.select(cols: _*))
-  }
+      hashName: String = "md5"): DataFrame =
+    graft.ops.PlanCache.cached(s"minhash-$n-$k-$hashName", docs) {
+      val sig = shingleHashes(docs, n, hashName).groupBy("doc_id")
+        .agg(graft.functions.MinHashSketch.minhashSketch(col("h"), k).as("mh"))
+      sig.select(col("doc_id") +:
+        (0 until k).map(i => element_at(col("mh"), i + 1).as(s"mh$i")): _*)
+    }
 
   /** Signature → (doc_id, band, bkey) rows — the LSH band index
     * itself. One row per (doc, band); docs sharing a (band, bkey) cell
@@ -215,9 +212,8 @@ object Dedup {
       hashName: String = "md5"): DataFrame =
     // three registry queries (pairs themselves, connected components,
     // contamination) consume this frame — materialize once
-    graft.ops.PlanCache.cachedBy(
-        s"lsh-pairs-$n-$k-$bands-$rowsPerBand-$minJaccard-$hashName",
-        docs.queryExecution.logical.semanticHash(), docs.sparkSession) {
+    graft.ops.PlanCache.cached(
+        s"lsh-pairs-$n-$k-$bands-$rowsPerBand-$minJaccard-$hashName", docs) {
       lshVerifiedJaccardPlan(docs, n, k, bands, rowsPerBand, minJaccard, hashName)
     }
 
@@ -359,8 +355,7 @@ object Dedup {
   val LanesPerLong = 3
 
   def simhash(docs: DataFrame, bits: Int): DataFrame =
-    graft.ops.PlanCache.cachedBy(s"simhash-$bits",
-        docs.queryExecution.logical.semanticHash(), docs.sparkSession) {
+    graft.ops.PlanCache.cached(s"simhash-$bits", docs) {
     simhashOfHashes(
       spread(docs).select(col("doc_id"), explode(tokens(col("text"))).as("t"))
         .select(col("doc_id"), portableHash(col("t")).as("h")), bits)
@@ -571,8 +566,7 @@ object Dedup {
     * family). */
   def positionalGrams(docs: DataFrame, n: Int,
       hashName: String = "md5"): DataFrame =
-    graft.ops.PlanCache.cachedBy(s"gram-pos-$n-$hashName",
-        docs.queryExecution.logical.semanticHash(), docs.sparkSession) {
+    graft.ops.PlanCache.cached(s"gram-pos-$n-$hashName", docs) {
       spread(docs).select(col("doc_id"), tokens(col("text")).as("tk"))
         .select(col("doc_id"), posexplode(shingles(col("tk"), n)).as(Seq("pos", "sh")))
         .select(col("doc_id"), col("pos").cast("long").as("pos"),
@@ -747,8 +741,7 @@ object Dedup {
 
   def substringMatches(docs: DataFrame, n: Int, maxLcp: Int,
       hashName: String = "md5", maxOcc: Int = 0): DataFrame =
-    graft.ops.PlanCache.cachedBy(s"substr-matches-$n-$maxLcp-$hashName-$maxOcc",
-        docs.queryExecution.logical.semanticHash(), docs.sparkSession) {
+    graft.ops.PlanCache.cached(s"substr-matches-$n-$maxLcp-$hashName-$maxOcc", docs) {
       val grams = positionalGrams(docs, n, hashName)
       val dupPos = grams.join(crossDocGramKeys(grams, maxOcc), Seq("h"), "left_semi")
       // suffixes only at duplicated positions, built from ONE doc-keyed
@@ -820,8 +813,7 @@ object Dedup {
     * per (n, hash, corpus) like the token-level [[positionalGrams]]. */
   def positionalCharGrams(docs: DataFrame, n: Int,
       hashName: String = "md5"): DataFrame =
-    graft.ops.PlanCache.cachedBy(s"chargram-pos-$n-$hashName",
-        docs.queryExecution.logical.semanticHash(), docs.sparkSession) {
+    graft.ops.PlanCache.cached(s"chargram-pos-$n-$hashName", docs) {
       val base = spread(docs).select(col("doc_id"), lower(trim(col("text"))).as("txt"))
       if (hashName == "md5")
         base.select(col("doc_id"),
@@ -847,8 +839,7 @@ object Dedup {
     * (doc_id, pos, match_len, sub) in character units. */
   def substringMatchesChar(docs: DataFrame, n: Int, maxLcp: Int,
       hashName: String = "md5", maxOcc: Int = 0): DataFrame =
-    graft.ops.PlanCache.cachedBy(s"substr-char-matches-$n-$maxLcp-$hashName-$maxOcc",
-        docs.queryExecution.logical.semanticHash(), docs.sparkSession) {
+    graft.ops.PlanCache.cached(s"substr-char-matches-$n-$maxLcp-$hashName-$maxOcc", docs) {
       val grams = positionalCharGrams(docs, n, hashName)
       val dupPos = grams.join(crossDocGramKeys(grams, maxOcc), Seq("h"), "left_semi")
       val perDoc = dupPos.groupBy("doc_id")

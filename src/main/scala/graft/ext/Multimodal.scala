@@ -92,8 +92,7 @@ object Multimodal {
             shiftleft(CAST(1 AS BIGINT), CAST(i AS INT)),
             CAST(0 AS BIGINT)))""").as("simhash"))
     if (docs.isStreaming) fp
-    else graft.ops.PlanCache.cachedBy("ahash-60",
-      docs.queryExecution.logical.semanticHash(), docs.sparkSession)(fp)
+    else graft.ops.PlanCache.cached("ahash-60", docs)(fp)
   }
 
   /** 120-bit wide twin of [[ahashFingerprints]] — the BAND-WIDTH
@@ -122,8 +121,7 @@ object Multimodal {
       .select(col("doc_id"),
         expr(word(0)).as("h0"), expr(word(60)).as("h1"))
     if (docs.isStreaming) fp
-    else graft.ops.PlanCache.cachedBy("ahash-120",
-      docs.queryExecution.logical.semanticHash(), docs.sparkSession)(fp)
+    else graft.ops.PlanCache.cached("ahash-120", docs)(fp)
   }
 
   /** e6-quantized 8-point DCT-II basis, row-major A[u·8+k] =
@@ -167,8 +165,7 @@ object Multimodal {
               CAST(1 + (i * length(text)) DIV 64 AS INT), 1)) AS BIGINT))"""))
           .as("simhash"))
     if (docs.isStreaming) fp
-    else graft.ops.PlanCache.cachedBy("dct-63",
-      docs.queryExecution.logical.semanticHash(), docs.sparkSession)(fp)
+    else graft.ops.PlanCache.cached("dct-63", docs)(fp)
   }
 
   /** Wrap any DataFrame with a binary `payload` column into the typed

@@ -231,8 +231,7 @@ object Similarity {
     * refine the same shape without changing any consumer. Cached: both
     * the assignment and the multi-probe query side consume it. */
   private def centroidArray(emb: DataFrame, k: Int): DataFrame =
-    graft.ops.PlanCache.cachedBy(s"ivf-cents-$k",
-        emb.queryExecution.logical.semanticHash(), emb.sparkSession) {
+    graft.ops.PlanCache.cached(s"ivf-cents-$k", emb) {
       withNorm(emb)
         .orderBy(Codecs.portableHash(col("vec_id")), col("vec_id"))
         .limit(k)
@@ -275,8 +274,7 @@ object Similarity {
     * Persisted via PlanCache: both sides of every IVF search join
     * consume it. */
   def ivfAssign(emb: DataFrame, k: Int): DataFrame =
-    graft.ops.PlanCache.cachedBy(s"ivf-k$k",
-        emb.queryExecution.logical.semanticHash(), emb.sparkSession) {
+    graft.ops.PlanCache.cached(s"ivf-k$k", emb) {
       ivfAssignCodebook(emb, centroidArray(emb, k))
     }
 
@@ -450,8 +448,7 @@ object Similarity {
     val cents = labelCentroids(emb, dims)
       .select(col("label"), col("centroid"))
       .withColumn("cn", norm(col("centroid")))
-    val scored = graft.ops.PlanCache.cachedBy(s"label-outlier-cos-$dims",
-        emb.queryExecution.logical.semanticHash(), emb.sparkSession) {
+    val scored = graft.ops.PlanCache.cached(s"label-outlier-cos-$dims", emb) {
       withNorm(emb).join(broadcast(cents), "label")
         .withColumn("cos",
           round(safeDiv(dot(col("v"), col("centroid")), col("nrm") * col("cn")), 4))
@@ -540,8 +537,7 @@ object Similarity {
     * fixed-point means — see [[kmeansCodebook]]). */
   def ivfTopKKmeans(emb: DataFrame, queryPred: Column, k: Int,
       kCentroids: Int, dims: Int, iters: Int): DataFrame = {
-    val assigned = graft.ops.PlanCache.cachedBy(s"ivf-km-$kCentroids-$iters",
-        emb.queryExecution.logical.semanticHash(), emb.sparkSession) {
+    val assigned = graft.ops.PlanCache.cached(s"ivf-km-$kCentroids-$dims-$iters", emb) {
       ivfAssignCodebook(emb, kmeansCodebook(emb, kCentroids, dims, iters))
     }
     topK(asQueries(assigned, queryPred, Seq("cell")),
@@ -577,8 +573,7 @@ object Similarity {
     * ONE broadcast array — codeword c of subspace s is seed c's
     * dims [s·sub+1, (s+1)·sub]. */
   private def pqSeeds(emb: DataFrame, k: Int): DataFrame =
-    graft.ops.PlanCache.cachedBy(s"pq-seeds-$k",
-        emb.queryExecution.logical.semanticHash(), emb.sparkSession) {
+    graft.ops.PlanCache.cached(s"pq-seeds-$k", emb) {
       withNorm(emb)
         .orderBy(Codecs.portableHash(col("vec_id")), col("vec_id"))
         .limit(k)
@@ -634,8 +629,7 @@ object Similarity {
     // query, and s_ann_pq + s_ann_pq_rerank (which encodes once for the
     // shortlist scan) would otherwise each rebuild it. At 100 TB this
     // frame IS the PQ store — codes are written once, queries only read.
-    graft.ops.PlanCache.cachedBy(s"pq-recon-$kCodes-$m-$dims",
-        emb.queryExecution.logical.semanticHash(), emb.sparkSession) {
+    graft.ops.PlanCache.cached(s"pq-recon-$kCodes-$m-$dims", emb) {
       withNorm(emb)
         .crossJoin(broadcast(pqSeeds(emb, kCodes)))
         .withColumn("codes", pqCodes(m, sub, kCodes))
@@ -719,8 +713,7 @@ object Similarity {
     * int codes represent. PlanCached: this frame is the quantized
     * store — written once, queries only read. */
   def sq8Quantize(emb: DataFrame): DataFrame =
-    graft.ops.PlanCache.cachedBy("sq8",
-        emb.queryExecution.logical.semanticHash(), emb.sparkSession) {
+    graft.ops.PlanCache.cached("sq8", emb) {
       withNorm(emb)
         .withColumn("mx", array_max(transform(col("v"), x => abs(x))))
         .withColumn("q8", transform(col("v"),

@@ -141,20 +141,21 @@ object TextOps {
   def packSequences(docs: DataFrame, chunkTokens: Long, bucketWidth: Long): DataFrame =
     packSized(
       docs.select(col("doc_id"), tokenCount(col("text")).cast("long").as("n_tok")),
-      chunkTokens, bucketWidth, "packseq")
+      chunkTokens, bucketWidth, "packseq", docs)
 
   /** [[packSequences]] over a caller-supplied `(doc_id, n_tok)` frame —
     * the length column is pluggable (whitespace tokens, BPE subword
     * counts, byte lengths) while the two-phase distributed cumsum is
-    * shared. */
+    * shared. `sizedIn` is derived from `inputs` by the derivation
+    * `tag` names; the sized frame is cached under both. */
   def packSized(sizedIn: DataFrame, chunkTokens: Long, bucketWidth: Long,
-      tag: String): DataFrame = {
+      tag: String, inputs: DataFrame*): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions.{broadcast, coalesce, sum}
     // sized feeds BOTH the per-bucket cumsum and the bucket-offset agg;
     // Catalyst does no cross-subtree common-plan elimination, so
     // without this cache the corpus would be sized twice
-    val sized = graft.ops.PlanCache.cached(s"$tag-$chunkTokens-$bucketWidth",
+    val sized = graft.ops.PlanCache.cached(s"$tag-$chunkTokens-$bucketWidth", inputs: _*)(
       sizedIn.withColumn("bucket", (col("doc_id") / bucketWidth).cast("long")))
     val local = sized.withColumn("local_end",
       sum(col("n_tok")).over(Window.partitionBy(col("bucket")).orderBy(col("doc_id"))))
@@ -182,7 +183,7 @@ object TextOps {
     val pairs = when(length(tok) >= 2,
       transform(sequence(lit(1), length(tok) - 1), i => tok.substr(i, lit(2))))
       .otherwise(array().cast("array<string>"))
-    graft.ops.PlanCache.cached("bpe-merge-cands",
+    graft.ops.PlanCache.cached("bpe-merge-cands", docs)(
       docs.select(explode(tokens(col("text"))).as("tok"))
         .select(explode(pairs).as("pair"))
         .groupBy("pair").agg(count(lit(1)).as("n")))
@@ -233,7 +234,7 @@ object TextOps {
     * share an encode (the DSIR digest-key lesson). */
   def bpeVocabEncoded(docs: DataFrame, merges: Seq[String]): DataFrame =
     graft.ops.PlanCache.cached(
-      "bpe-vocab-" + graft.ops.PlanCache.digest(merges.mkString(" ")),
+      "bpe-vocab-" + graft.ops.PlanCache.digest(merges.mkString(" ")), docs)(
       docs.select(explode(tokens(col("text"))).as("tok")).distinct()
         .withColumn("subs", bpeSegment(col("tok"), merges))
         .withColumn("n_sub", size(col("subs")).cast("long")))
@@ -246,8 +247,7 @@ object TextOps {
     * this fan-in (swap in [[graft.codec.Codecs.portableHash]] keys if
     * a production corpus makes the string shuffle the bottleneck). */
   def bigramOccurrences(docs: DataFrame): DataFrame =
-    graft.ops.PlanCache.cachedBy("bigram-occ",
-        docs.queryExecution.logical.semanticHash(), docs.sparkSession) {
+    graft.ops.PlanCache.cached("bigram-occ", docs) {
       docs.select(col("doc_id"), tokens(col("text")).as("tk"))
         .select(col("doc_id"), explode(shingles(col("tk"), 2)).as("s"))
     }
@@ -255,8 +255,7 @@ object TextOps {
   /** Per-bigram document frequency over [[bigramOccurrences]] — shared
     * by the top-k vocabulary view and the commonness score. */
   def bigramDf(docs: DataFrame): DataFrame =
-    graft.ops.PlanCache.cachedBy("bigram-df",
-        docs.queryExecution.logical.semanticHash(), docs.sparkSession) {
+    graft.ops.PlanCache.cached("bigram-df", docs) {
       bigramOccurrences(docs).groupBy("s")
         .agg(countDistinct(col("doc_id")).as("df"))
     }
@@ -277,8 +276,7 @@ object TextOps {
     // two registry queries (the per-doc scores and the bucket report,
     // which also references the frame twice for its stats row) consume
     // this — materialize once like the other shared derived frames
-    graft.ops.PlanCache.cachedBy("bigram-lm",
-        docs.queryExecution.logical.semanticHash(), docs.sparkSession) {
+    graft.ops.PlanCache.cached("bigram-lm", docs) {
       bigramOccurrences(docs).join(bigramDf(docs), "s")
         .groupBy("doc_id")
         .agg(count(lit(1)).as("n_bigrams"),
@@ -340,6 +338,15 @@ object TextOps {
       .select(col("source"), col("n_grams"), col("n_distinct"),
         round(col("n_distinct").cast("double") / col("n_grams"), 4).as("diversity"))
 
+  /** (source, t, c_st): per-source token counts, the cached substrate
+    * of [[sourceUnigramKl]], [[sourceJsDivergence]] and the Simpson
+    * diversity row. */
+  def sourceTokenCounts(docs: DataFrame): DataFrame =
+    graft.ops.PlanCache.cached("src-tok-counts", docs) {
+      docs.select(col("source"), explode(tokens(col("text"))).as("t"))
+        .groupBy("source", "t").agg(count(lit(1)).as("c_st"))
+    }
+
   /** Per-source unigram KL divergence against the corpus distribution:
     * KL(p_s ‖ p_c) = Σ_t p_s(t)·ln(p_s(t)/p_c(t)) — the standard
     * mixture-drift diagnostic (which sources are token-distribution
@@ -355,11 +362,7 @@ object TextOps {
     * the final log terms, rounded at the call site. */
   def sourceUnigramKl(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.broadcast
-    val st = graft.ops.PlanCache.cachedBy("src-tok-counts",
-        docs.queryExecution.logical.semanticHash(), docs.sparkSession) {
-      docs.select(col("source"), explode(tokens(col("text"))).as("t"))
-        .groupBy("source", "t").agg(count(lit(1)).as("c_st"))
-    }
+    val st = sourceTokenCounts(docs)
     val nS = st.groupBy("source").agg(sum(col("c_st")).as("n_s"))
     val cT = st.groupBy("t").agg(sum(col("c_st")).as("c_t"))
     val nTot = nS.agg(sum(col("n_s")).as("n_tot"))
@@ -397,11 +400,7 @@ object TextOps {
     * pass, not a bigger join. */
   def sourceJsDivergence(docs: DataFrame, maxPairs: Long = 4096L): DataFrame = {
     import org.apache.spark.sql.functions.broadcast
-    val st = graft.ops.PlanCache.cachedBy("src-tok-counts",
-        docs.queryExecution.logical.semanticHash(), docs.sparkSession) {
-      docs.select(col("source"), explode(tokens(col("text"))).as("t"))
-        .groupBy("source", "t").agg(count(lit(1)).as("c_st"))
-    }
+    val st = sourceTokenCounts(docs)
     val nS = st.groupBy("source").agg(sum(col("c_st")).as("n_s"))
     val k = nS.count()
     require(k * (k - 1) / 2 <= maxPairs,
@@ -455,9 +454,8 @@ object TextOps {
       .select(col("doc_id"), isTarget.as("is_t"), tokens(col("text")).as("tk"))
       .select(col("doc_id"), col("is_t"), explode(shingles(col("tk"), 2)).as("g"))
       .withColumn("b", pmod(portableHash(col("g")), lit(vBuckets.toLong)))
-    graft.ops.PlanCache.cachedBy(
-        s"dsir-docbuckets-$vBuckets-${graft.ops.PlanCache.digest(isTarget.toString)}",
-        docs.queryExecution.logical.semanticHash(), docs.sparkSession) {
+    graft.ops.PlanCache.cached(
+        s"dsir-docbuckets-$vBuckets-${graft.ops.PlanCache.digest(isTarget.toString)}", docs) {
       occ.groupBy(col("doc_id"), col("b"))
         .agg(count(lit(1)).as("c_db"), first(col("is_t")).as("is_t"))
     }
@@ -493,9 +491,8 @@ object TextOps {
     // (weights, resample apply, calibration) read this frame, and at
     // production scale the per-doc weight table is exactly the staging
     // table a DSIR pipeline persists once per (corpus, target, model)
-    graft.ops.PlanCache.cachedBy(
-        s"dsir-weights-$vBuckets-${graft.ops.PlanCache.digest(isTarget.toString)}",
-        docs.queryExecution.logical.semanticHash(), docs.sparkSession) {
+    graft.ops.PlanCache.cached(
+        s"dsir-weights-$vBuckets-${graft.ops.PlanCache.digest(isTarget.toString)}", docs) {
       dsirWeightsUncached(docs, isTarget, vBuckets)
     }
 
@@ -542,8 +539,7 @@ object TextOps {
     require(targets.nonEmpty, "at least one target slice")
     val tkey = graft.ops.PlanCache.digest(
       targets.map { case (n, p) => s"$n:${p.toString}" }.mkString("|"))
-    val pd = graft.ops.PlanCache.cachedBy(s"dsir-multi-pd-$vBuckets-$tkey",
-        docs.queryExecution.logical.semanticHash(), docs.sparkSession) {
+    val pd = graft.ops.PlanCache.cached(s"dsir-multi-pd-$vBuckets-$tkey", docs) {
       val marked = docs.select(
         Seq(col("doc_id"), tokens(col("text")).as("tk")) ++
           targets.zipWithIndex.map { case ((_, p), i) => p.as(s"t$i") }: _*)
@@ -573,8 +569,7 @@ object TextOps {
     // the per-doc-per-target weight table is cached like the
     // single-target one: the weights query and the per-target
     // calibration both read it
-    graft.ops.PlanCache.cachedBy(s"dsir-multi-w-$vBuckets-$tkey",
-        docs.queryExecution.logical.semanticHash(), docs.sparkSession) {
+    graft.ops.PlanCache.cached(s"dsir-multi-w-$vBuckets-$tkey", docs) {
       pd.join(broadcast(model), "b")
         .groupBy(col("doc_id"), col("target"))
         .agg(sum(col("c_db")).as("n_grams"),
@@ -689,10 +684,9 @@ object TextOps {
   def bigramCrossEntropy(docs: DataFrame): DataFrame =
     // cached like the LM substrates it composes: t_bigram_ppl and
     // e_ppl_filter both read the per-doc score frame, and the
-    // vocabulary count is a COLLECT at construction — the lazy
-    // cachedBy form runs both once per (session, corpus plan)
-    graft.ops.PlanCache.cachedBy("bigram-xent",
-        docs.queryExecution.logical.semanticHash(), docs.sparkSession) {
+    // vocabulary count is a COLLECT at construction — PlanCache runs
+    // both once per (session, corpus plan)
+    graft.ops.PlanCache.cached("bigram-xent", docs) {
       val occ = bigramOccurrences(docs) // (doc_id, s) one row per position
       val c2 = occ.groupBy("s").agg(count(lit(1)).as("c2"))
       val c1 = c2.select(split(col("s"), " ").getItem(0).as("w1"), col("c2"))
@@ -715,8 +709,7 @@ object TextOps {
     * and any future trigram consumer share one tokenize+shingle
     * substrate. */
   def trigramOccurrences(docs: DataFrame): DataFrame =
-    graft.ops.PlanCache.cachedBy("trigram-occ",
-        docs.queryExecution.logical.semanticHash(), docs.sparkSession) {
+    graft.ops.PlanCache.cached("trigram-occ", docs) {
       docs.select(col("doc_id"), tokens(col("text")).as("tk"))
         .select(col("doc_id"), explode(shingles(col("tk"), 3)).as("s"))
     }
@@ -741,8 +734,7 @@ object TextOps {
   def trigramCrossEntropy(docs: DataFrame): DataFrame =
     // lazy-cached like the bigram twin: the vocabulary count is a
     // collect at CONSTRUCTION, which must run once per corpus plan
-    graft.ops.PlanCache.cachedBy("trigram-xent",
-        docs.queryExecution.logical.semanticHash(), docs.sparkSession) {
+    graft.ops.PlanCache.cached("trigram-xent", docs) {
       val ctx = concat_ws(" ", slice(split(col("s"), " "), 1, 2))
       val occ = trigramOccurrences(docs) // (doc_id, s) one row per position
       val c3 = occ.groupBy("s").agg(count(lit(1)).as("c3"))

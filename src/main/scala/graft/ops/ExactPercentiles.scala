@@ -20,7 +20,8 @@ object ExactPercentiles {
   /** `df` must expose group column `k` and value column `x` (numeric).
     * Returns one row per (k, quantile): (k, qname, v) with `v` the
     * exact interpolated percentile as double. `cacheTag` names the
-    * cumulative-histogram PlanCache entry — it feeds both the
+    * cumulative-histogram PlanCache entry, keyed by `df` and
+    * `fewGroups` — it feeds both the
     * order-statistic join and the group sizes, and uncached the
     * histogram shuffle would run twice.
     *
@@ -76,7 +77,7 @@ object ExactPercentiles {
           .drop("b", "local_end", "base")
       }
     // cum_start/cum_end delimit each value's 0-indexed rank interval
-    val cum = PlanCache.cached(cacheTag,
+    val cum = PlanCache.cached(s"$cacheTag-fewGroups=$fewGroups", df)(
       withCum.withColumn("cum_start", col("cum_end") - col("cnt")))
     val qdf = qs.toDF("qname", "q")
     // group sizes fold over the cum frame (max cum_end), not a second

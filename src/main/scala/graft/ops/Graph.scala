@@ -16,8 +16,7 @@ object Graph {
     * before the registry share each rebuilt the same distinct per
     * query. */
   private def vertsOf(edges: DataFrame): DataFrame =
-    PlanCache.checkpointed("graph-verts",
-        edges.queryExecution.logical.semanticHash(), edges.sparkSession) {
+    PlanCache.checkpointed("graph-verts", edges) {
       edges.select(col("src").as("node"))
         .union(edges.select(col("dst").as("node")))
         .distinct()
@@ -30,8 +29,7 @@ object Graph {
     * bfsHopsPerSeed as the hop increment — same values, one shared
     * materialization per (session, edge plan). */
   private def unitAugEdges(edges: DataFrame): DataFrame =
-    PlanCache.checkpointed("graph-aug-unit",
-        edges.queryExecution.logical.semanticHash(), edges.sparkSession) {
+    PlanCache.checkpointed("graph-aug-unit", edges) {
       edges.select(col("src"), col("dst"), lit(1L).as("delta"))
         .union(vertsOf(edges).select(col("node").as("src"),
           col("node").as("dst"), lit(0L).as("delta")))
@@ -52,16 +50,14 @@ object Graph {
     * stage the edge list as a bucketed table instead (the PlanCache
     * scale note). */
   private def prStatics(edges: DataFrame): (DataFrame, DataFrame) = {
-    val eKey = edges.queryExecution.logical.semanticHash()
-    val spark = edges.sparkSession
     val outw = edges.groupBy(col("src")).agg(sum(col("w")).as("wout"))
-    val e = PlanCache.checkpointed("graph-pr-edges", eKey, spark) {
+    val e = PlanCache.checkpointed("graph-pr-edges", edges) {
       edges.join(outw, "src")
         .select(col("src"), col("dst"), col("w").cast("long").as("w"),
           col("wout").cast("long").as("wout"))
         .repartition(col("src"))
     }
-    val verts0 = PlanCache.checkpointed("graph-pr-verts", eKey, spark) {
+    val verts0 = PlanCache.checkpointed("graph-pr-verts", edges) {
       e.select(col("src").as("node"))
         .union(e.select(col("dst").as("node")))
         .distinct()
@@ -315,8 +311,7 @@ object Graph {
   def minPlus(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val verts = vertsOf(edges)
-    val e2 = PlanCache.checkpointed("graph-aug-cost",
-        edges.queryExecution.logical.semanticHash(), edges.sparkSession) {
+    val e2 = PlanCache.checkpointed("graph-aug-cost", edges) {
       edges.select(col("src"), col("dst"), col("cost").cast("long").as("delta"))
         .union(verts.select(col("node").as("src"), col("node").as("dst"),
           lit(0L).as("delta")))
@@ -521,10 +516,8 @@ object Graph {
     * struct-min argmax). The bounded unroll is ONE job. */
   def labelPropagation(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    // registry-shared (and no longer eager per CONSTRUCTION — the
-    // footgun purchaseCommunities' cachedBy form documents)
-    val e = PlanCache.checkpointed("graph-lpa-edges",
-        edges.queryExecution.logical.semanticHash(), edges.sparkSession) {
+    // registry-shared, so the eager checkpoint runs once per edge frame
+    val e = PlanCache.checkpointed("graph-lpa-edges", edges) {
       edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
         .repartition(col("src"))
     }

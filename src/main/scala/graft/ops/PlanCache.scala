@@ -4,32 +4,42 @@ import java.nio.file.Files
 import java.nio.file.attribute.BasicFileAttributes
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** Materialized-intermediate registry. A self-join or a family of
   * queries over the same derived frame (e.g. the shingle-hash index
   * shared by Jaccard/MinHash/LSH) would otherwise re-evaluate the
   * whole derivation per subtree occurrence — Catalyst does not do
-  * cross-subtree common-plan elimination. Keyed by (session, logical
-  * plan semantic hash, tag): session-scoped so a cached frame can
-  * never outlive its SparkContext, semantic so two structurally-equal
-  * derivations share one persisted copy.
+  * cross-subtree common-plan elimination.
   *
-  * Three tiers share one map, one exactly-once holder and one
-  * eviction:
-  *  - [[cachedBy]] / [[cached]] persist a derived frame;
-  *  - [[checkpointed]] localCheckpoints one;
-  *  - [[relation]] persists nothing: it memoizes a base relation (a
-  *    `spark.read.parquet` frame) so its schema inference, a Spark
-  *    job, runs once per session and file stamp instead of per build.
+  * One key rule: a shared frame is keyed by its session, its tag and
+  * the semantic hashes of the frames it is DERIVED FROM, never by its
+  * own plan. The derivation runs only on a miss, so a derivation that
+  * holds a Scala closure (a typed `mapPartitions`, a Column lambda
+  * such as `Codecs.tokens`' filter), whose own plan never hashes
+  * equal across builds, still hits on every later build. The tag must
+  * therefore carry every parameter the derivation reads besides its
+  * inputs, and one tag names one derivation.
   *
-  * Key rule: a plan that holds a Scala closure (a typed
-  * `groupByKey`/`mapGroups` lambda, a per-call `udf`) never hashes
-  * equal across builds, because each build makes a new closure object.
-  * [[cached]] on such a plan misses every time and persists one more
-  * copy per build. Key it by its closure-free INPUT with [[cachedBy]]
-  * instead; the derivation then also runs only on a miss.
+  * Two materialization kinds share one map, one exactly-once holder
+  * and one eviction:
+  *  - [[cached]] persists the derived frame (MEMORY_AND_DISK);
+  *  - [[checkpointed]] localCheckpoints it, for frames a bounded
+  *    unroll reads every iteration.
+  * The [[relation]] tier persists nothing: it memoizes a base
+  * relation (a `spark.read.parquet` frame) per session, path and file
+  * stamp, so its schema inference, a Spark job, runs once, and frames
+  * keyed by it hit.
+  *
+  * Staleness contract: keys are plan-based, not data-based — if the
+  * files under a path change while a session lives, a persisted frame
+  * keeps serving the old data (exactly like a Spark `.cache()`); call
+  * [[clear]] after mutating inputs. Eviction is two-layered: a
+  * SparkListener drops a context's entries as soon as its application
+  * ends (persisted blocks die with the context, so only the map
+  * references need dropping), and a sweep on every access catches
+  * sessions whose context stopped without the listener firing.
   *
   * Scale note: on a cluster this is the "staging table" step — at
   * 100 TB the same call site writes a bucketed intermediate instead of
@@ -56,9 +66,6 @@ object PlanCache {
   // moment the context ends — not merely on the next access
   private val hooked = TrieMap.empty[String, Boolean]
 
-  def cached(tag: String, df: DataFrame): DataFrame =
-    cachedBy(tag, df.queryExecution.logical.semanticHash(), df.sparkSession)(df)
-
   /** Collision-safe tag component for caller-rendered strings (e.g. a
     * target predicate's `Column.toString`). A 32-bit `String.hashCode`
     * here would let two different predicates over the same corpus
@@ -69,39 +76,30 @@ object PlanCache {
     java.security.MessageDigest.getInstance("SHA-256")
       .digest(s.getBytes("UTF-8")).take(12).map("%02x".format(_)).mkString
 
-  /** Variant with an explicit key, for callers whose frame is expensive
-    * even to CONSTRUCT (partition probes, wide generated expressions):
-    * `build` runs only on a cache miss.
-    *
-    * Staleness contract: the key is PLAN-based, not data-based — if the
-    * files under a path change while a session lives, the persisted
-    * frame keeps serving the old data (exactly like a Spark
-    * `.cache()`); call [[clear]] after mutating inputs. Eviction is
-    * two-layered: a SparkListener drops a context's entries as soon as
-    * its application ends (persisted blocks die with the context, so
-    * only the map references need dropping), and a sweep on every
-    * access catches sessions whose context stopped without the listener
-    * firing — either way persisted frames cannot accumulate past their
-    * SparkContext's lifetime. */
-  def cachedBy(tag: String, key: Int, spark: org.apache.spark.sql.SparkSession)(
-      build: => DataFrame): DataFrame =
-    entry(tag, key, spark)(build.persist(StorageLevel.MEMORY_AND_DISK))
+  /** Persist `derive`, keyed by `tag` and the frames it is derived
+    * from (see the key rule above). */
+  def cached(tag: String, inputs: DataFrame*)(derive: => DataFrame): DataFrame =
+    keyed(tag, inputs)(derive.persist(StorageLevel.MEMORY_AND_DISK))
 
-  /** localCheckpoint-backed sibling of [[cachedBy]], for frames a
+  /** localCheckpoint-backed sibling of [[cached]], for frames a
     * bounded unroll references EVERY iteration: persist() pays a
     * columnar decode per reference (measured 8× slower cold on the
     * common-neighbors incidence frame, BASELINE.md r9), while a
-    * localCheckpoint scan replays raw rows. Registry-shared so two
-    * queries over the same input (g_bfs / g_harmonic's augmented edge
-    * list, g_pagerank / g_ppr_suppliers' degree-annotated one)
-    * materialize it ONCE per session instead of once per query.
-    * Same staleness/eviction contract as [[cachedBy]]; the build is
-    * materialized eagerly (localCheckpoint default), so a loud
-    * validation inside it (pageRankFixed's dangling-mass guard) fires
-    * at first-build time exactly as before. */
-  def checkpointed(tag: String, key: Int, spark: org.apache.spark.sql.SparkSession)(
-      build: => DataFrame): DataFrame =
-    entry("ck:" + tag, key, spark)(build.localCheckpoint())
+    * localCheckpoint scan replays raw rows. The build is materialized
+    * eagerly (localCheckpoint default), so a loud validation inside it
+    * (pageRankFixed's dangling-mass guard) fires at first-build time. */
+  def checkpointed(tag: String, inputs: DataFrame*)(derive: => DataFrame): DataFrame =
+    keyed("ck:" + tag, inputs)(derive.localCheckpoint())
+
+  private def keyed(tag: String, inputs: Seq[DataFrame])(
+      materialize: => DataFrame): DataFrame = {
+    require(inputs.nonEmpty, s"PlanCache tag $tag: at least one input frame")
+    val spark = inputs.head.sparkSession
+    require(inputs.forall(_.sparkSession eq spark),
+      s"PlanCache tag $tag: inputs from more than one session")
+    val key = inputs.foldLeft(0)((h, df) => h * 31 + df.queryExecution.logical.semanticHash())
+    entry(tag, key, spark)(materialize)
+  }
 
   /** Base-relation tier: `build` (a file read) runs once per session,
     * path and file stamp, and the frame is NOT persisted — only its
@@ -114,10 +112,8 @@ object PlanCache {
     * file under it for a directory. A file rewritten in place under the
     * same path therefore gets a fresh read, and the superseded stamp's
     * entry is dropped. A path that is not on the local file system, or
-    * does not exist, is not memoized: `build` runs on every call.
-    * Frames DERIVED from the relation keep the plan-keyed staleness
-    * contract of [[cachedBy]]. */
-  def relation(path: String, spark: org.apache.spark.sql.SparkSession)(
+    * does not exist, is not memoized: `build` runs on every call. */
+  def relation(path: String, spark: SparkSession)(
       build: => DataFrame): DataFrame =
     stamp(path, spark) match {
       case None => build
@@ -131,7 +127,7 @@ object PlanCache {
         entry(tag, 0, spark)(build)
     }
 
-  private def stamp(path: String, spark: org.apache.spark.sql.SparkSession): Option[String] = {
+  private def stamp(path: String, spark: SparkSession): Option[String] = {
     val uri = new org.apache.hadoop.fs.Path(path).toUri
     val scheme = Option(uri.getScheme).getOrElse(
       org.apache.hadoop.fs.FileSystem.getDefaultUri(spark.sparkContext.hadoopConfiguration).getScheme)
@@ -149,10 +145,10 @@ object PlanCache {
     }
   }
 
-  private def sessionKey(spark: org.apache.spark.sql.SparkSession): String =
+  private def sessionKey(spark: SparkSession): String =
     spark.sparkContext.applicationId + "/" + System.identityHashCode(spark)
 
-  private def entry(tag: String, key: Int, spark: org.apache.spark.sql.SparkSession)(
+  private def entry(tag: String, key: Int, spark: SparkSession)(
       materialize: => DataFrame): DataFrame = {
     // sweep only SETTLED holders: forcing an in-flight one here would
     // block the sweep (and every caller) on a foreign build
@@ -194,6 +190,9 @@ object PlanCache {
       throw e
     }
   }
+
+  /** The live keys (session, input hash, tag), for tests. */
+  private[graft] def keys: Set[(String, Int, String)] = cache.keySet.toSet
 
   def clear(): Unit = {
     cache.values.foreach { o =>

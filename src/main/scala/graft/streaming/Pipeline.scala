@@ -405,10 +405,8 @@ object Pipeline {
     // static plan EVERY micro-batch, and re-hashing the corpus per
     // batch is exactly the cost the incremental design exists to avoid
     // (in production this frame is the persisted band staging table)
-    val corpusCells = graft.ops.PlanCache.cachedBy(
-        s"incr-gate-cells-$n-$k-$bands-$rowsPerBand",
-        corpusDocs.queryExecution.logical.semanticHash(),
-        corpusDocs.sparkSession) {
+    val corpusCells = graft.ops.PlanCache.cached(
+        s"incr-gate-cells-$n-$k-$bands-$rowsPerBand", corpusDocs) {
       corpusDocs
         .select(col("doc_id").as("corpus_doc"), hashesOf(col("text")).as("c_hashes"))
         .filter(size(col("c_hashes")) > 0)
@@ -476,9 +474,7 @@ object Pipeline {
       array_distinct(transform(sequence(lit(1), size(hs) - (w - 1)),
         i0 => array_min(slice(hs, i0, lit(w))))))
       .otherwise(array().cast("array<long>"))
-    val corpusIdx = graft.ops.PlanCache.cachedBy(s"winnow-gate-idx-$n-$w",
-        corpusDocs.queryExecution.logical.semanticHash(),
-        corpusDocs.sparkSession) {
+    val corpusIdx = graft.ops.PlanCache.cached(s"winnow-gate-idx-$n-$w", corpusDocs) {
       graft.ext.TextOps.winnow(corpusDocs, n, w)
         .groupBy(col("doc_id").as("corpus_doc"))
         .agg(collect_set(col("fp")).as("c_fps"))
@@ -530,9 +526,7 @@ object Pipeline {
     def segsOf(h: String): Column = expr(
       s"""transform(sequence(0, ${nSeg - 1}), s ->
           named_struct('seg', s, 'segval', ${segOf(h, "s")}))""")
-    val corpusIdx = graft.ops.PlanCache.cachedBy("ahash-gate-idx",
-        corpusDocs.queryExecution.logical.semanticHash(),
-        corpusDocs.sparkSession) {
+    val corpusIdx = graft.ops.PlanCache.cached(s"ahash-gate-idx-$maxHamming", corpusDocs) {
       graft.ext.Multimodal.ahashFingerprints(corpusDocs)
         .select(col("doc_id").as("corpus_doc"), col("simhash").as("c_hash"),
           explode(segsOf("simhash")).as("b"))
@@ -592,9 +586,7 @@ object Pipeline {
       maxFrac: Double): DataFrame = {
     import org.apache.spark.sql.Encoders
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val idx = graft.ops.PlanCache.cachedBy(s"substr-gate-idx-$n",
-        corpusDocs.queryExecution.logical.semanticHash(),
-        corpusDocs.sparkSession) {
+    val idx = graft.ops.PlanCache.cached(s"substr-gate-idx-$n", corpusDocs) {
       graft.ext.Dedup.positionalGrams(corpusDocs, n)
         .groupBy("h")
         .agg(countDistinct(col("doc_id")).as("nd"), min(col("doc_id")).as("d0"))
@@ -942,9 +934,7 @@ object Pipeline {
   def chunkGate(docs: DataFrame, corpusDocs: DataFrame, n: Int): DataFrame = {
     import org.apache.spark.sql.Encoders
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val idx = graft.ops.PlanCache.cachedBy(s"chunk-gate-idx-$n",
-        corpusDocs.queryExecution.logical.semanticHash(),
-        corpusDocs.sparkSession) {
+    val idx = graft.ops.PlanCache.cached(s"chunk-gate-idx-$n", corpusDocs) {
       graft.ext.Dedup.docChunks(corpusDocs, n)
         .groupBy("h").agg(min(col("okey")).as("keep_key"))
     }

@@ -17,18 +17,19 @@ import graft.ops.PlanCache
   * contract the parallel prepare relies on. */
 class PlanCacheConcurrencySpec extends SparkSpec {
 
-  test("concurrent cachedBy calls on one key run the build exactly once") {
+  test("concurrent cached calls on one key run the build exactly once") {
     val builds = new AtomicInteger(0)
     val nThreads = 8
     val ready = new CountDownLatch(nThreads)
     val go = new CountDownLatch(1)
     val pool = Executors.newFixedThreadPool(nThreads)
     val spk = spark
+    val input = spk.range(1).toDF()
     val futs = (1 to nThreads).map { _ =>
       pool.submit(new java.util.concurrent.Callable[Long] {
         override def call(): Long = {
           ready.countDown(); go.await()
-          val df = PlanCache.cachedBy("spec-conc-once", 0xC0FFEE, spk) {
+          val df = PlanCache.cached("spec-conc-once", input) {
             builds.incrementAndGet()
             spk.range(1000L).select(col("id"), (col("id") * 2).as("v"))
           }
@@ -51,11 +52,12 @@ class PlanCacheConcurrencySpec extends SparkSpec {
     val go = new CountDownLatch(1)
     val pool = Executors.newFixedThreadPool(nThreads)
     val spk = spark
+    val input = spk.range(1).toDF()
     val futs = (1 to nThreads).map { _ =>
       pool.submit(new java.util.concurrent.Callable[Long] {
         override def call(): Long = {
           go.await()
-          PlanCache.checkpointed("spec-conc-ck", 0xBEEF, spk) {
+          PlanCache.checkpointed("spec-conc-ck", input) {
             builds.incrementAndGet()
             spk.range(500L).select(col("id"))
           }.count()
@@ -72,14 +74,15 @@ class PlanCacheConcurrencySpec extends SparkSpec {
   test("a failed build is retried by the next caller, not cached") {
     val attempts = new AtomicInteger(0)
     val spk = spark
+    val input = spk.range(1).toDF()
     intercept[RuntimeException] {
-      PlanCache.cachedBy("spec-conc-fail", 0xDEAD, spk) {
+      PlanCache.cached("spec-conc-fail", input) {
         attempts.incrementAndGet()
         throw new RuntimeException("boom")
       }
     }
     // second call re-runs the thunk (lazy val failure does not settle)
-    val df = PlanCache.cachedBy("spec-conc-fail", 0xDEAD, spk) {
+    val df = PlanCache.cached("spec-conc-fail", input) {
       attempts.incrementAndGet()
       spk.range(10L).toDF("id")
     }

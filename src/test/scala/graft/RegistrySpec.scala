@@ -1,11 +1,40 @@
 package graft
 
+import java.util.concurrent.{Callable, Executors}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.DataFrame
+import graft.ops.PlanCache
+
 /** Contract pins for the driver-facing registry itself: every query
   * must carry a DuckDB oracle (a missing entry silently downgrades
   * the driver's check to rows-only), names must be unique across the
   * bench's two timing namespaces, and the flagship entry must return
   * rows on the smoke fixture. */
 class RegistrySpec extends SparkSpec {
+
+  /** Builds every registry row on the sf0.001 fixture and returns
+    * `f` of each frame. Construction fans out on a small pool: several
+    * builders run eager substrate jobs (sketch collects, codebook
+    * literals, union-find), and one thread walking all 319 took ~65 s
+    * of the suite — PlanCache's exactly-once holder makes concurrent
+    * construction safe (PlanCacheConcurrencySpec pins it). */
+  private def buildAll[A](f: (String, DataFrame) => Seq[A]): Seq[A] = {
+    val pool = Executors.newFixedThreadPool(8)
+    try {
+      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+        pool.submit(new Callable[Seq[A]] {
+          override def call(): Seq[A] = f(name, fn(spark, "/root/testdata/sf0.001"))
+        })
+      }.flatMap(_.get())
+    } finally pool.shutdown()
+  }
+
+  private val mainRoot = java.nio.file.Paths.get("src/main/scala")
+  private lazy val mainSources: Seq[java.nio.file.Path] = {
+    val walk = java.nio.file.Files.walk(mainRoot)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    finally walk.close()
+  }
 
   test("every registry query has an oracle, and no oracle is orphaned") {
     val q = SparkEntry.queries.keySet
@@ -32,28 +61,29 @@ class RegistrySpec extends SparkSpec {
     // a 114-ok local gate (tools/local_check.py canonicalizes via
     // repr() and passed). Schema analysis only; nothing executes.
     import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
-    val dir = "/root/testdata/sf0.001"
-    // construction fans out on a small pool: several builders run eager
-    // substrate jobs (sketch collects, codebook literals, union-find),
-    // and one thread walking all 319 took ~65 s of the suite —
-    // PlanCache's exactly-once holder makes concurrent construction
-    // safe (PlanCacheConcurrencySpec pins it)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-    val bad = try {
-      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-        pool.submit(new java.util.concurrent.Callable[Seq[String]] {
-          override def call(): Seq[String] =
-            fn(spark, dir).schema.fields.collect {
-              case f if f.dataType.isInstanceOf[ArrayType] ||
-                f.dataType.isInstanceOf[MapType] ||
-                f.dataType.isInstanceOf[StructType] =>
-                s"$name.${f.name}: ${f.dataType.simpleString}"
-            }.toSeq
-        })
-      }.flatMap(_.get())
-    } finally pool.shutdown()
+    val bad = buildAll { (name, df) =>
+      df.schema.fields.collect {
+        case f if f.dataType.isInstanceOf[ArrayType] ||
+          f.dataType.isInstanceOf[MapType] ||
+          f.dataType.isInstanceOf[StructType] =>
+          s"$name.${f.name}: ${f.dataType.simpleString}"
+      }.toSeq
+    }
     assert(bad.isEmpty,
       s"driver-unsortable output columns (pandas sort_values crashes on these): $bad")
+  }
+
+  test("a second build of every registry row adds no PlanCache key") {
+    // every shared frame is keyed by the closure-free frames it derives
+    // from, so a rebuild hits; a key that only the second build makes
+    // is a derivation run, and persisted, once more per build
+    buildAll((_, df) => { df.schema; Nil })
+    val first = PlanCache.keys
+    buildAll((_, df) => { df.schema; Nil })
+    val second = PlanCache.keys
+    assert(second === first,
+      s"keys added: ${second.diff(first).map(_._3).toSeq.sorted}; " +
+        s"keys dropped: ${first.diff(second).map(_._3).toSeq.sorted}")
   }
 
   test("bench stdout contract line is registry-size-independent and far under the tail capture") {
@@ -97,19 +127,31 @@ class RegistrySpec extends SparkSpec {
   test("only GraftSession builds a SparkSession in main code") {
     // one session factory keeps Bench, Verify and the tests on one conf;
     // scaladoc examples (`* SparkSession.builder()`) are not calls
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main/scala")
-    val files = java.nio.file.Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
-    assert(files.size > 50, s"walked ${files.size} files under $root")
-    val builders = files.flatMap { f =>
+    assert(mainSources.size > 50, s"walked ${mainSources.size} files under $mainRoot")
+    val builders = mainSources.flatMap { f =>
       java.nio.file.Files.readAllLines(f).asScala.collect {
         case line if line.contains("SparkSession.builder()") &&
             !line.trim.startsWith("*") && !line.trim.startsWith("//") =>
-          root.relativize(f).toString
+          mainRoot.relativize(f).toString
       }
     }
     assert(builders === Seq("graft/GraftSession.scala"), builders.mkString(", "))
+  }
+
+  test("every string-literal PlanCache tag is passed at exactly one call site") {
+    // a shared frame is keyed by its tag and its inputs, so two call
+    // sites that share a tag over one input, but derive differently,
+    // would silently serve each other's frame
+    val call = """PlanCache\.(?:cached|checkpointed)\(\s*"([^"]*)"\s*,""".r
+    val sites = mainSources.flatMap { f =>
+      call.findAllMatchIn(java.nio.file.Files.readString(f)).map(m =>
+        m.group(1) -> mainRoot.relativize(f).toString)
+    }
+    assert(sites.size > 30, s"found ${sites.size} literal-tag call sites")
+    val shared = sites.groupBy(_._1).collect {
+      case (tag, at) if at.size > 1 => s"$tag (${at.map(_._2).mkString(", ")})"
+    }
+    assert(shared.isEmpty, s"tags passed at more than one call site: ${shared.toSeq.sorted}")
   }
 
   test("the spin probe is a plausible fixed-work timing") {
