@@ -762,7 +762,16 @@ object Pipeline {
     * cos): append-safe and stateless — a re-sent query re-emits
     * identical rows — with the per-query top-k cut being the
     * consumer's foreachBatch rollup, as with the admission gates. */
-  def annStream(queries: DataFrame, store: DataFrame, kCells: Int): DataFrame = {
+  def annStream(queries: DataFrame, store: DataFrame, kCells: Int): DataFrame =
+    annCandidates(queries, store, kCells)
+      .select(col("q_id"), col("vec_id").as("neighbor_id"),
+        round(col("cos_raw"), 4).as("cos"))
+
+  /** The cell-mate candidates both ANN operators score: `carry`
+    * columns and q_id of each query, the store's vec_id, and the
+    * UNROUNDED cosine as `cos_raw` (NaN for a zero-norm side). */
+  private def annCandidates(queries: DataFrame, store: DataFrame, kCells: Int,
+      carry: String*): DataFrame = {
     import graft.ext.Similarity
     val assigned = Similarity.ivfAssign(store, kCells)
       .select(col("cell"), col("vec_id"), col("v"), col("nrm"))
@@ -771,14 +780,15 @@ object Pipeline {
     // a pure row-local fold — no broadcast join, no state
     val centsLit = Similarity.codebookLiteral(store, kCells)
     queries
-      .select(col("q_id"), Similarity.asDouble(col("embedding")).as("qv"))
+      .select((carry :+ "q_id").map(col) :+
+        Similarity.asDouble(col("embedding")).as("qv"): _*)
       .withColumn("qn", Similarity.norm(col("qv")))
       .withColumn("cell", Similarity.cellOf(centsLit, col("qv"), col("qn")))
       .join(assigned, Seq("cell")) // stream-static equi-join on the cell
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        round(when(col("qn") * col("nrm") =!= 0.0d,
+      .withColumn("cos_raw",
+        when(col("qn") * col("nrm") =!= 0.0d,
           Similarity.dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-          .otherwise(lit(Double.NaN)), 4).as("cos"))
+          .otherwise(lit(Double.NaN)))
   }
 
   /** Streaming ANN SERVE gate — [[annStream]] plus the per-query
@@ -797,21 +807,8 @@ object Pipeline {
     * construction of the codebook) — the same bound the batch probe
     * pays; the store is never shuffled per micro-batch. */
   def annGate(queries: DataFrame, store: DataFrame, kCells: Int, k: Int,
-      watermarkDelay: String, windowLen: String): DataFrame = {
-    import graft.ext.Similarity
-    val assigned = Similarity.ivfAssign(store, kCells)
-      .select(col("cell"), col("vec_id"), col("v"), col("nrm"))
-    val centsLit = Similarity.codebookLiteral(store, kCells)
-    queries
-      .withWatermark("ts", watermarkDelay)
-      .select(col("ts"), col("q_id"), Similarity.asDouble(col("embedding")).as("qv"))
-      .withColumn("qn", Similarity.norm(col("qv")))
-      .withColumn("cell", Similarity.cellOf(centsLit, col("qv"), col("qn")))
-      .join(assigned, Seq("cell")) // stream-static equi-join on the cell
-      .withColumn("cos_raw",
-        when(col("qn") * col("nrm") =!= 0.0d,
-          Similarity.dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-          .otherwise(lit(Double.NaN)))
+      watermarkDelay: String, windowLen: String): DataFrame =
+    annCandidates(queries.withWatermark("ts", watermarkDelay), store, kCells, "ts")
       .groupBy(window(col("ts"), windowLen), col("q_id"))
       .agg(slice(array_sort(collect_list(struct(
         (col("cos_raw") * -1.0d).as("nc"), col("vec_id"),
@@ -819,7 +816,6 @@ object Pipeline {
       .select(col("q_id"), posexplode(col("top")))
       .select(col("q_id"), col("col.vec_id").as("neighbor_id"),
         (col("pos") + 1).cast("int").as("rnk"), col("col.cos"))
-  }
 
   /** Start the streaming query: raw Kafka-shaped stream in, four sinks
     * out, one source read per micro-batch. The batch is unpersisted

@@ -2,8 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout,
-  OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming trace assembly (SURVEY.md §7.5): spans of one trace arrive
   * over time; a trace is "complete" when no new span has been seen for
@@ -41,64 +40,6 @@ object StreamingTraceAssembly {
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
         (traceId: String, events: Iterator[SpanEvent], state: GroupState[TraceBuf]) =>
           step(traceId, events, state, gapMs))
-  }
-
-  /** The same assembly semantics on the transformWithState API (the
-    * successor to flatMapGroupsWithState): typed ValueState plus
-    * explicit per-key event-time TIMERS instead of a single timeout
-    * slot. The stale timer left by each earlier batch is deleted when
-    * a new span extends the trace, so exactly one timer per open trace
-    * is live — state stays O(open traces), same as [[assemble]].
-    * Requires the RocksDB state store provider. */
-  def assembleTws(spans: Dataset[SpanEvent], watermarkDelay: String, gapMs: Long)
-      : Dataset[AssembledTrace] = {
-    implicit val outEnc = Encoders.product[AssembledTrace]
-    implicit val strEnc = Encoders.STRING
-    spans
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.trace_id)
-      .transformWithState(new TraceAssemblyProcessor(gapMs),
-        TimeMode.EventTime(), OutputMode.Append())
-  }
-
-  private class TraceAssemblyProcessor(gapMs: Long)
-      extends StatefulProcessor[String, SpanEvent, AssembledTrace] {
-    @transient private var buf: ValueState[TraceBuf] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      buf = getHandle.getValueState[TraceBuf]("buf",
-        Encoders.product[TraceBuf], TTLConfig.NONE)
-
-    override def handleInputRows(traceId: String, rows: Iterator[SpanEvent],
-        tv: TimerValues): Iterator[AssembledTrace] = {
-      val had = buf.exists()
-      val old = if (had) buf.get() else TraceBuf(Nil, Long.MaxValue, Long.MinValue)
-      val merged = rows.foldLeft(old) { (b, e) =>
-        val t = e.ts.getTime
-        TraceBuf(e.name :: b.names, math.min(b.firstMs, t), math.max(b.lastMs, t))
-      }
-      buf.update(merged)
-      // keep exactly one live timer per open trace
-      if (had && old.lastMs + gapMs != merged.lastMs + gapMs)
-        getHandle.deleteTimer(old.lastMs + gapMs)
-      getHandle.registerTimer(merged.lastMs + gapMs)
-      Iterator.empty
-    }
-
-    override def handleExpiredTimer(traceId: String, tv: TimerValues,
-        info: ExpiredTimerInfo): Iterator[AssembledTrace] = {
-      if (!buf.exists()) Iterator.empty
-      else {
-        val b = buf.get()
-        if (info.getExpiryTimeInMs() < b.lastMs + gapMs) Iterator.empty // stale timer
-        else {
-          buf.clear()
-          Iterator.single(AssembledTrace(
-            traceId, b.names.size.toLong, b.names.sorted.mkString(","),
-            b.firstMs, b.lastMs))
-        }
-      }
-    }
   }
 
   private[streaming] def step(

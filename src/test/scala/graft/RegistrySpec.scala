@@ -11,6 +11,7 @@ import graft.ops.PlanCache
   * bench's two timing namespaces, and the flagship entry must return
   * rows on the smoke fixture. */
 class RegistrySpec extends SparkSpec {
+  import RegistrySpec._
 
   /** Builds every registry row on the sf0.001 fixture and returns
     * `f` of each frame. Construction fans out on a small pool: several
@@ -138,6 +139,45 @@ class RegistrySpec extends SparkSpec {
     assert(builders === Seq("graft/GraftSession.scala"), builders.mkString(", "))
   }
 
+  private val streamingFiles: Map[String, Earns] = Map(
+    "Pipeline" -> PaperPath,
+    "PipelineDemo" -> PaperPath,
+    "StreamingAttribution" -> Twin("a_attribution_bounded"),
+    "StreamingBackfill" -> Twin("a_gap_fill"),
+    "StreamingCriticalPath" -> Twin("q_critical_path"),
+    "StreamingCusum" -> Twin("a_cusum"),
+    "StreamingEwma" -> Twin("a_ewma"),
+    "StreamingFunnel" -> Twin("a_funnel"),
+    "StreamingHeavyHitters" -> Twin("t_heavy_hitters"),
+    "StreamingHotKeys" -> LlmOperator, // online stop-shingle feed for near-dup
+    "StreamingLocf" -> Twin("a_gap_fill"),
+    "StreamingPacker" -> Twin("t_pack_sequences"),
+    "StreamingProfiler" -> Twin("p_profile"),
+    "StreamingRollingMedian" -> Twin("a_rolling_median"),
+    "StreamingSessionize" -> Twin("a_sessionize"),
+    "StreamingStreaks" -> Twin("a_streaks"),
+    "StreamingTopK" -> Twin("a_rank_churn"), // the per-part revenue top-k head
+    "StreamingTraceAssembly" -> Twin("q_trace_assembly"),
+    "StreamingTransitions" -> Twin("a_transitions"),
+    "StreamingTrend" -> Twin("a_trend"),
+    "StreamingWindowedPercentiles" -> Twin("a_windowed_percentiles"))
+
+  test("each streaming file is paper path, registry twin or LLM op") {
+    val dir = mainRoot.resolve("graft/streaming")
+    val onDisk = mainSources.filter(_.getParent == dir)
+      .map(_.getFileName.toString.stripSuffix(".scala")).toSet
+    assert(onDisk.nonEmpty, s"no sources under $dir")
+    val unlisted = onDisk -- streamingFiles.keySet
+    val gone = streamingFiles.keySet -- onDisk
+    assert(unlisted.isEmpty, s"streaming files with no reason to stay: ${unlisted.toSeq.sorted}")
+    assert(gone.isEmpty, s"listed streaming files not on disk: ${gone.toSeq.sorted}")
+    val rows = SparkEntry.queries.keySet
+    val noRow = streamingFiles.toSeq.collect {
+      case (f, Twin(row)) if !rows.contains(row) => s"$f -> $row"
+    }
+    assert(noRow.isEmpty, s"twins of rows not in the registry: ${noRow.sorted}")
+  }
+
   test("every string-literal PlanCache tag is passed at exactly one call site") {
     // a shared frame is keyed by its tag and its inputs, so two call
     // sites that share a tag over one input, but derive differently,
@@ -166,4 +206,15 @@ class RegistrySpec extends SparkSpec {
     val l = Bench.load1()
     assert(l >= 0.0 && l < 100000.0, s"load1() = $l")
   }
+}
+
+object RegistrySpec {
+  /** Why a `graft.streaming` file stays: it serves the paper's
+    * decode → context → branch → four-sink path, it is the streaming
+    * twin of a registry row (with a replay-equality spec), or it is
+    * one of the LLM-pipeline operators. */
+  sealed trait Earns
+  case object PaperPath extends Earns
+  final case class Twin(row: String) extends Earns
+  case object LlmOperator extends Earns
 }

@@ -159,48 +159,6 @@ class StreamingRecoverySpec extends SparkSpec {
     }
   }
 
-  test("debounce admission anchor survives a checkpoint restart") {
-    // state loss here is not a wrong number but a wrong ADMISSION: a
-    // restarted query that forgot the anchor treats the next sub-gap
-    // event as a key's first and admits it
-    withRocksDB {
-      implicit val sqlCtx = spark.sqlContext
-      import graft.streaming.StreamingDebounce
-      import graft.streaming.StreamingDebounce.{Ev, Verdict}
-      val input = MemoryStream[Ev]
-      val out = StreamingDebounce.debounce(input.toDS(), gapUs = 10L)
-      val cp = java.nio.file.Files.createTempDirectory("deb-cp").toString
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Verdict]
-      def start() = out.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", cp)
-        .foreachBatch { (ds: org.apache.spark.sql.Dataset[Verdict], _: Long) =>
-          val got = ds.collect()
-          buf.synchronized { buf ++= got }
-          ()
-        }
-        .start()
-
-      val q1 = start()
-      try { input.addData(Seq(Ev("a", 0L, 1L))); q1.processAllAvailable() }
-      finally q1.stop()
-
-      // a sub-gap event and a past-gap event arrive while the query
-      // is down; the restored anchor (admit at ts 0) must reject the
-      // first and admit the second
-      input.addData(Seq(Ev("a", 5L, 2L), Ev("a", 12L, 3L)))
-      val q2 = start()
-      try q2.processAllAvailable()
-      finally q2.stop()
-
-      val got = buf.synchronized { buf.toVector }
-        .sortBy(v => (v.ts_us, v.event_id))
-        .map(v => (v.event_id, v.admitted))
-      assert(got === Seq((1L, true), (2L, false), (3L, true)),
-        "a lost anchor admits the sub-gap event 2 as a first arrival")
-    }
-  }
-
   test("interval-overlap join state survives a checkpoint restart") {
     // the stream-stream join restore path: a left interval buffered in
     // run 1 must still match a right interval that only ARRIVES after

@@ -64,47 +64,6 @@ class StreamingTraceAssemblySpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("transformWithState twin emits the same traces as flatMapGroupsWithState") {
-    implicit val sqlCtx = spark.sqlContext
-    // the transformWithState operator requires the RocksDB provider
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[SpanEvent]
-    val out = StreamingTraceAssembly.assembleTws(input.toDS(), "10 seconds", gapMs = 5000L)
-    val q = out.writeStream.format("memory").queryName("assembled_tws")
-      .outputMode("append").start()
-    try {
-      // same scenario as the flatMapGroupsWithState case above
-      input.addData(ev("A", "set", 0), ev("A", "send-even", 100))
-      q.processAllAvailable()
-      assert(spark.table("assembled_tws").count() === 0)
-      input.addData(ev("A", "send-odd", 2000)) // extends A: old timer must be replaced
-      q.processAllAvailable()
-      input.addData(ev("B", "set", 3600000))
-      q.processAllAvailable()
-      input.addData(ev("C", "set", 7200000))
-      q.processAllAvailable()
-
-      val rows = spark.table("assembled_tws").as[AssembledTrace].collect()
-      assert(rows.map(_.trace_id).toSet === Set("A", "B"))
-      val a = rows.find(_.trace_id == "A").get
-      assert(a.n_spans === 3L)
-      assert(a.span_names === "send-even,send-odd,set")
-      assert(a.start_ms === t0 && a.end_ms === t0 + 2000)
-      assert(rows.count(_.trace_id == "A") === 1,
-        "the replaced timer must not double-emit the trace")
-      assert(!rows.exists(_.trace_id == "C"))
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None    => spark.conf.unset(providerKey)
-      }
-    }
-  }
-
   test("streaming bucket-fill packer reproduces the batch packer's bucket-local offsets") {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.StreamingPacker
