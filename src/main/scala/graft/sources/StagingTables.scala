@@ -28,41 +28,13 @@ object StagingTables {
       .saveAsTable(table)
   }
 
-  /** Overwrite a SMALL unbucketed managed table — the publication form
-    * for driver-bounded artifacts that must outlive one driver (a
-    * served leaderboard, a gauge snapshot): any Spark application
-    * sharing the warehouse/metastore resolves it by name, where a
-    * global temp view dies with its session state. First write from a
-    * fresh JVM sweeps an orphaned location; steady-state republication
-    * is a plain overwrite. */
-  def writeSmall(df: DataFrame, table: String): Unit = {
-    validId(table) // every catalog entry point validates, not only the
-    // not-exists path — steady-state republication must not pass an
-    // unvetted identifier straight to saveAsTable
-    val spark = df.sparkSession
-    if (!spark.catalog.tableExists(table)) dropWithLocation(spark, table)
-    df.write.mode(SaveMode.Overwrite).format("parquet").saveAsTable(table)
-  }
-
-  /** Create `table` EMPTY with `df`'s schema only when it does not
-    * already exist — the cold-start initializer for published
-    * artifacts that must SURVIVE a driver restart (a board that
-    * outlived the previous driver is the whole point of the
-    * table-backed publication; overwriting it with an empty frame at
-    * startup would serve an empty board to every other application
-    * until the first republication). */
-  def initSmallIfAbsent(df: DataFrame, table: String): Unit = {
-    validId(table)
-    if (!df.sparkSession.catalog.tableExists(table)) writeSmall(df, table)
-  }
-
   /** Create `table` EMPTY, PARTITIONED by `partCol`, only when it does
     * not already exist — the cold-start initializer for append-style
     * compaction targets whose writer keys each micro-batch to its own
     * partition (so an at-least-once replay dynamically OVERWRITES its
     * partition instead of duplicating rows; see
-    * [[graft.streaming.Pipeline.freshnessDayCompactor]]). Same
-    * survive-a-restart contract as [[initSmallIfAbsent]]. */
+    * [[graft.streaming.Pipeline.freshnessDayCompactor]]). An existing
+    * table is left as it is: its rows must survive a driver restart. */
   def initPartitionedIfAbsent(df: DataFrame, table: String, partCol: String): Unit = {
     validId(table)
     val spark = df.sparkSession
@@ -70,40 +42,6 @@ object StagingTables {
       dropWithLocation(spark, table)
       df.write.mode(SaveMode.Overwrite).partitionBy(partCol)
         .format("parquet").saveAsTable(table)
-    } else if (!spark.table(table).columns.contains(partCol)) {
-      // A table written by a pre-partitioned layout (e.g. the old
-      // Append-mode compactor): MIGRATE its rows into the sentinel
-      // partCol = -1 partition instead of letting the first
-      // positional insert die on a column-count mismatch — surviving
-      // a restart is the table form's whole contract, and silently
-      // recreating empty would erase the survived data. Rows are
-      // staged to a temp dir first (the recreate drops the files the
-      // migrating frame would otherwise still be scanning).
-      System.err.println(s"[staging] migrating table '$table' to the " +
-        s"'$partCol'-partitioned layout (existing rows -> $partCol=-1)")
-      import org.apache.spark.sql.functions.lit
-      val pType = df.schema(partCol).dataType
-      val tmp = java.nio.file.Files.createTempDirectory(s"migrate_$table").toFile
-      // tmp is deleted ONLY on success: after dropWithLocation the
-      // staging dir holds the ONLY copy of the survived rows, so a
-      // failure in the recreate/insert must leave it recoverable (and
-      // say where it is) instead of a finally-delete erasing the very
-      // rows whose survival is this method's contract.
-      try {
-        spark.table(table).write.mode(SaveMode.Overwrite).parquet(tmp.getPath)
-        dropWithLocation(spark, table)
-        df.write.mode(SaveMode.Overwrite).partitionBy(partCol)
-          .format("parquet").saveAsTable(table)
-        spark.read.parquet(tmp.getPath)
-          .withColumn(partCol, lit(-1).cast(pType))
-          .write.insertInto(table)
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[staging] migration of '$table' FAILED after " +
-            s"staging its rows — recover them from ${tmp.getPath} (${e.getMessage})")
-          throw e
-      }
-      deleteRecursively(tmp)
     }
   }
 
@@ -145,6 +83,4 @@ object StagingTables {
       deleteRecursively(new java.io.File(wh, rel))
     }
   }
-
-  def read(spark: SparkSession, table: String): DataFrame = spark.table(table)
 }

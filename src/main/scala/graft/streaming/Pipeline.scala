@@ -2,8 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.ops.ContextOps
 import graft.sources.LocalFs
 
@@ -56,15 +55,12 @@ object Pipeline {
   def processBatch(raw: DataFrame): (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val decoded = ContextOps.setBaggage(ContextOps.decode(raw))
     val (even, odd) = ContextOps.evenOdd(decoded)
-    (withOutputHeaders(even), withOutputHeaders(odd),
+    // output records carry re-encoded headers: b3 replaced with the
+    // child span context, messageid appended
+    // (reference contract: StreamsConfigTest.java:64,111)
+    (ContextOps.encodeHeaders(even), ContextOps.encodeHeaders(odd),
       ContextOps.standardSpans(decoded), ContextOps.standardLogs(decoded))
   }
-
-  /** Output records carry re-encoded headers: b3 replaced with the
-    * child span context, messageid appended
-    * (reference contract: StreamsConfigTest.java:64,111). */
-  private def withOutputHeaders(df: DataFrame): DataFrame =
-    ContextOps.encodeHeaders(df)
 
   /** Watermarked tumbling-window branch statistics over the decoded
     * stream: per (window, branch) record counts and value sums, with
@@ -987,12 +983,7 @@ object Pipeline {
     * rows, and valid rows are absent. */
   def fkGate(rows: DataFrame, dim: DataFrame, rowKey: String,
       dimKey: String, rule: String): DataFrame =
-    // alias the dimension key before joining: with rowKey == dimKey
-    // (the common user_id -> user_id FK shape) an unqualified
-    // col(dimKey) would be ambiguous and fail analysis
-    rows.join(dim.select(col(dimKey).as("__dim_key")).distinct(),
-        rows(rowKey) === col("__dim_key"), "left_anti")
-      .withColumn("rule", lit(rule))
+    keyJoin(rows, rowKey, dim, dimKey, "left_anti").withColumn("rule", lit(rule))
 
   /** Streaming right-to-be-forgotten gate — the online form of the
     * batch `e_forget` cascade's apply step: arriving rows whose key
@@ -1003,8 +994,7 @@ object Pipeline {
     * pass through unchanged. */
   def forgetGate(rows: DataFrame, tombstones: DataFrame, rowKey: String,
       tombKey: String): DataFrame =
-    rows.join(tombstones.select(col(tombKey).as("__tomb_key")).distinct(),
-      rows(rowKey) === col("__tomb_key"), "left_anti")
+    keyJoin(rows, rowKey, tombstones, tombKey, "left_anti")
 
   /** The audit complement of [[forgetGate]]: exactly the rows the
     * gate suppressed, tagged with the deletion rule — what the
@@ -1012,44 +1002,27 @@ object Pipeline {
     * disjointly (spec-pinned). */
   def forgetAudit(rows: DataFrame, tombstones: DataFrame, rowKey: String,
       tombKey: String, rule: String): DataFrame =
-    rows.join(tombstones.select(col(tombKey).as("__tomb_key")).distinct(),
-        rows(rowKey) === col("__tomb_key"), "left_semi")
+    keyJoin(rows, rowKey, tombstones, tombKey, "left_semi")
       .withColumn("rule", lit(rule))
 
-  /** Live per-type freshness gauge — the streaming half of the batch
-    * `p_freshness` row: a plain UPDATE-mode aggregation (built-ins
-    * win when they express the semantics — a custom processor here
-    * would re-implement max+count) whose state is bounded by the
-    * event-type vocabulary: two longs per type, forever. Consume with
-    * [[freshnessReport]] inside foreachBatch (the topkServe
-    * publish-per-micro-batch shape). */
-  def freshnessGauge(events: DataFrame): DataFrame =
-    events.select(col("event_type"), expr("unix_micros(ts)").as("us"))
-      .groupBy("event_type")
-      .agg(max(col("us")).as("last_us"), count(lit(1)).as("n_total"))
+  /** The governance gates' one join: `rows` against the distinct keys
+    * of `keys` (`left_anti` or `left_semi`). The key is aliased before
+    * joining: with rowKey == keyCol (the common user_id -> user_id
+    * shape) an unqualified col(keyCol) would be ambiguous and fail
+    * analysis. */
+  private def keyJoin(rows: DataFrame, rowKey: String, keys: DataFrame,
+      keyCol: String, how: String): DataFrame =
+    rows.join(keys.select(col(keyCol).as("__key")).distinct(),
+      rows(rowKey) === col("__key"), how)
 
-  /** Fold the current gauge table to the operator-facing freshness
-    * report: per type, lag behind the freshest type and the 6-hour
-    * staleness flag — the p_freshness projection DERIVABLE from the
-    * gauge's two longs (the microsecond-exact n_last_day needs history
-    * this gauge cannot carry; [[freshnessDayGauge]]/[[freshnessDayReport]]
-    * carry the day-granular answer). Batch-equality on replay is
-    * spec-pinned against p_freshness on the same data. */
-  def freshnessReport(gauge: DataFrame): DataFrame = {
-    val g = gauge.agg(max(col("last_us")).as("g_us"))
-    gauge.crossJoin(broadcast(g))
-      .select(col("event_type"), col("n_total"), col("last_us"),
-        (col("g_us") - col("last_us")).as("lag_us"),
-        (col("g_us") - col("last_us") <= 21600000000L).as("fresh_6h"))
-  }
-
-  /** Day-bucketed freshness gauge — the second aggregation that
-    * carries what [[freshnessGauge]]'s two longs cannot: per
-    * (event_type, day) arrival counts, so the live report can answer
-    * "how much landed recently" at day granularity. Still a plain
+  /** Day-bucketed freshness gauge — the streaming half of the batch
+    * `p_freshness` row: per (event_type, day) arrival counts and last
+    * arrival, so the live report ([[freshnessDayReport]]) can answer
+    * "how much landed recently" at day granularity. A plain
     * UPDATE-mode aggregation (built-ins win: state = one (n, last_us)
-    * pair per type×day); in production a watermark on ts bounds the
-    * open buckets and closed days compact into the batch table. */
+    * pair per type×day); [[freshnessDayGaugeWatermarked]] is its
+    * bounded production form, and closed days compact into the batch
+    * table ([[freshnessDayCompactor]]). */
   def freshnessDayGauge(events: DataFrame): DataFrame =
     events.select(col("event_type"),
         expr("unix_micros(ts) div 86400000000").as("day"),
@@ -1082,8 +1055,8 @@ object Pipeline {
     * aggregation run in APPEND mode, where Spark emits a (type, day)
     * row exactly ONCE, when the watermark passes the day window plus
     * lateness, i.e. exactly when the day CLOSES. Each emission appends
-    * into a managed batch table (create-if-absent, the board-init
-    * discipline), so compacted history accumulates where the batch
+    * into a managed batch table, created only when absent so that it
+    * survives a restart: compacted history accumulates where the batch
     * freshness queries read while the live UPDATE-mode gauge carries
     * only open days. Replay contract (spec-pinned,
     * StreamingGovernanceSpec): after any prefix of the stream the
@@ -1150,9 +1123,12 @@ object Pipeline {
   def freshnessDayHistory(spark: SparkSession, table: String): DataFrame =
     spark.table(table).select("event_type", "day", "n_day", "last_us")
 
-  /** Report over the day gauge: everything [[freshnessReport]] emits
-    * plus `n_last_day_approx` — the trailing-24 h arrival count at DAY
-    * resolution (all buckets whose day index reaches the window).
+  /** Report over the day gauge, column for column the batch
+    * p_freshness row: per type the total count, last arrival, lag
+    * behind the freshest type, `n_last_day_approx` and the 6-hour
+    * staleness flag. `n_last_day_approx` is the trailing-24 h arrival
+    * count at DAY resolution (all buckets whose day index reaches the
+    * window).
     * Exactly the batch p_freshness `n_last_day` whenever the window
     * cut lands on a bucket boundary; otherwise an overcount bounded by
     * the partial first bucket (the microsecond-exact count needs
@@ -1242,204 +1218,5 @@ object Pipeline {
         .as("n_terms_hit"))
       .filter(col("n_terms_hit") > 0)
       .select(col("doc_id"), round(col("score"), 4).as("score"), col("n_terms_hit"))
-  }
-
-  // --- Live leaderboard serve (StreamingTopK × per-batch lookup)
-
-  /** Publisher leg of the live-leaderboard serve path: foreachBatch
-    * over [[StreamingTopK.leaderboards]]' update stream folds each
-    * batch's board emissions into a latest-per-shard map held on the
-    * driver (≤ shards boards of k pairs — driver-sized by
-    * construction, the codebook-literal argument) and re-registers
-    * `viewName` as the merged (key, total, rank) global top-k.
-    * Re-publishing between micro-batches is what makes the lookup leg
-    * live: its join runs inside foreachBatch, where every micro-batch
-    * is a fresh batch query that re-resolves the view by name — the
-    * [[annStream]] stream-static serve shape with the static side
-    * maintained by a second stream instead of a PlanCached store.
-    * (A plain stream-static join would NOT see republications: the
-    * streaming plan resolves the view once at start.) */
-  def topkPublisher(k: Int, viewName: String)
-      : (org.apache.spark.sql.Dataset[StreamingTopK.Board], Long) => Unit =
-    // GLOBAL temp view: each streaming query's foreachBatch runs in
-    // its own cloned session, so a session-local view published here
-    // would be invisible to the serve query's clone
-    topkFold(k, (spark, board) =>
-      board(spark).createOrReplaceGlobalTempView(viewName))
-
-  /** Table-backed twin of [[topkPublisher]]: each republication
-    * OVERWRITES a managed parquet table via
-    * [[graft.sources.StagingTables.writeSmall]] instead of swapping a
-    * global temp view, so the board survives the publishing driver and
-    * any Spark application sharing the warehouse/metastore serves from
-    * it — the multi-driver deployment a temp view (one driver's shared
-    * session state) cannot reach. The write is a ≤ k-row parquet
-    * commit per micro-batch; on a production lake the same call
-    * targets a transactional table format for atomic swaps. */
-  def topkPublisherTable(k: Int, table: String)
-      : (org.apache.spark.sql.Dataset[StreamingTopK.Board], Long) => Unit = {
-    // Every publication carries a rank-0 HEARTBEAT row, so the table
-    // is never legitimately 0 rows — which is what lets the serve leg
-    // tell a published EMPTY board (heartbeat present, no data rows)
-    // from the non-atomic overwrite's drop+recreate window (nothing
-    // listed). The version value is informational (a per-publisher
-    // publication counter; restarts reset it) — rank 0 alone is the
-    // discriminator. coalesce(1) keeps heartbeat + board in ONE
-    // parquet file, so a reader can never list the heartbeat without
-    // the data rows it was committed with.
-    val ver = new java.util.concurrent.atomic.AtomicLong(0L)
-    topkFold(k, (spark, board) =>
-      graft.sources.StagingTables.writeSmall(
-        board(spark).union(
-          spark.createDataFrame(Seq((BoardVersionKey, ver.incrementAndGet(), 0L)))
-            .toDF("key", "total", "rank")).coalesce(1), table))
-  }
-
-  /** Key of the rank-0 heartbeat row [[topkPublisherTable]] publishes
-    * alongside every board (and [[topkServeTable]]'s cold-start init
-    * writes at version 0). Never served: [[boardSnapshot]] strips it
-    * on the serve leg, [[topkBoard]] strips it for every OTHER
-    * application reading the published table. */
-  private[graft] val BoardVersionKey = "__graft_board_version__"
-
-  /** Reader view of a published top-k table: the board rows without
-    * the writer's rank-0 heartbeat (the freshnessDayHistory
-    * convention — cross-driver publication is the table form's whole
-    * point, so external readers get the stripped view as API instead
-    * of each rediscovering the lineage row). */
-  def topkBoard(spark: SparkSession, table: String): DataFrame =
-    spark.table(table).filter(col("rank") >= 1L)
-
-  /** Shared publisher fold: latest board per shard (≤ shards entries
-    * of k pairs — driver-sized by construction, the codebook-literal
-    * argument), merged to the global top-k and handed to `publish` as
-    * a (key, total, rank) frame builder. */
-  private def topkFold(k: Int,
-      publish: (SparkSession, SparkSession => DataFrame) => Unit)
-      : (org.apache.spark.sql.Dataset[StreamingTopK.Board], Long) => Unit = {
-    val latest =
-      scala.collection.concurrent.TrieMap.empty[Int, StreamingTopK.Board]
-    (batch, _) => {
-      val spark = batch.sparkSession
-      batch.collect().foreach { b =>
-        latest.updateWith(b.shard) {
-          case Some(old) if old.ver >= b.ver => Some(old)
-          case _                             => Some(b)
-        }
-      }
-      val rows = StreamingTopK.merged(latest.values.toSeq, k).zipWithIndex
-        .map { case ((key, total), i) => (key, total, (i + 1).toLong) }
-      publish(spark,
-        s => s.createDataFrame(rows).toDF("key", "total", "rank"))
-      ()
-    }
-  }
-
-  /** Lookup leg, pure batch so the wiring and the spec share it:
-    * requests join the published ≤ k-row board (broadcast); misses
-    * emit in_topk = false with null rank/total. */
-  def topkLookup(requests: DataFrame, board: DataFrame): DataFrame =
-    requests.join(broadcast(board), Seq("key"), "left")
-      .withColumn("in_topk", col("rank").isNotNull)
-
-  /** Wire both legs: increments feed the sharded exact leaderboard
-    * whose boards publish through [[topkPublisher]]; the request
-    * stream scores per micro-batch via [[topkLookup]] against the
-    * freshest published view and hands each scored batch to `sink`.
-    * The view starts empty so cold-start requests answer
-    * in_topk = false instead of failing resolution. Returns
-    * (publisher, server); stop the server first. */
-  def topkServe(incs: org.apache.spark.sql.Dataset[StreamingTopK.Inc],
-      requests: DataFrame, k: Int, shards: Int, viewName: String)(sink: Sink)
-      : (StreamingQuery, StreamingQuery) = {
-    incs.sparkSession.createDataFrame(Seq.empty[(String, Long, Long)])
-      .toDF("key", "total", "rank").createOrReplaceGlobalTempView(viewName)
-    val pub = StreamingTopK.leaderboards(incs, k, shards)
-      .writeStream.outputMode("update")
-      .foreachBatch(topkPublisher(k, viewName)).start()
-    val serve = requests.writeStream.outputMode("append")
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        sink(id, topkLookup(b, b.sparkSession.table("global_temp." + viewName)))
-        ()
-      }.start()
-    (pub, serve)
-  }
-
-  /** [[topkServe]] with the board published to a managed TABLE
-    * ([[topkPublisherTable]]) instead of a global temp view: identical
-    * serve semantics in one driver (StreamingTopKSpec pins replay
-    * equality against the view form), but the publication outlives the
-    * driver and is resolvable by any application on the shared
-    * catalog. Cold start CREATES the table empty only when absent
-    * (create-if-absent, not overwrite — a board that survived the
-    * previous driver is the survivability the table form exists for,
-    * and must not be erased at restart), so first requests answer
-    * in_topk = false instead of failing resolution.
-    *
-    * Publication is a plain-parquet saveAsTable overwrite — a
-    * NON-ATOMIC drop+recreate, so a concurrent reader can catch the
-    * table mid-swap (resolution failure or an empty listing). The
-    * serve leg therefore snapshots the ≤ k-row board per micro-batch
-    * (bounded collect — the topkFold leaderboard argument) and keeps
-    * the LAST GOOD snapshot: a read that fails or comes back empty
-    * mid-swap serves the previous board instead of killing the query
-    * or answering every key in_topk = false. On a production lake the
-    * publisher targets a transactional table format and the swap is
-    * atomic; the fallback then never fires but still guards reader
-    * restarts racing the first publication. A published EMPTY board
-    * is NOT the fallback case: every publication (and the cold-start
-    * init) carries the rank-0 heartbeat row, so the table is never
-    * legitimately 0 rows and an empty listing is unambiguously the
-    * swap window — a heartbeat-only read serves the genuinely empty
-    * board instead of pinning the stale one forever. */
-  def topkServeTable(incs: org.apache.spark.sql.Dataset[StreamingTopK.Inc],
-      requests: DataFrame, k: Int, shards: Int, table: String)(sink: Sink)
-      : (StreamingQuery, StreamingQuery) = {
-    graft.sources.StagingTables.initSmallIfAbsent(
-      incs.sparkSession.createDataFrame(Seq((BoardVersionKey, 0L, 0L)))
-        .toDF("key", "total", "rank"), table)
-    val pub = StreamingTopK.leaderboards(incs, k, shards)
-      .writeStream.outputMode("update")
-      .foreachBatch(topkPublisherTable(k, table)).start()
-    val lastGood = new java.util.concurrent.atomic.AtomicReference[
-      Seq[(String, Long, Long)]](Seq.empty)
-    val serve = requests.writeStream.outputMode("append")
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        sink(id, topkLookup(b, boardSnapshot(b.sparkSession, table, lastGood)))
-        ()
-      }.start()
-    (pub, serve)
-  }
-
-  /** One serve-side board read with the last-good fallback (shared
-    * with the spec so the mid-swap path is pinned): refresh the
-    * reader's file-status cache (the republication happened in
-    * ANOTHER session's write — stale listings raise FILE_NOT_EXIST),
-    * read the board, strip the rank-0 heartbeat, and keep the data
-    * rows; a FAILED or 0-row read serves the previous snapshot.
-    * The heartbeat is what makes the 0-row branch sound: every
-    * publication carries it in the same single parquet file, so an
-    * empty listing can only be the drop+recreate window — a
-    * legitimately empty board reads back as heartbeat-only (1 row)
-    * and is SERVED empty, never shadowed by the stale last-good.
-    * A non-empty read without a heartbeat (a hand-loaded or legacy
-    * table) is accepted as-is. */
-  private[graft] def boardSnapshot(spark: SparkSession, table: String,
-      lastGood: java.util.concurrent.atomic.AtomicReference[Seq[(String, Long, Long)]])
-      : DataFrame = {
-    import spark.implicits._
-    val rows =
-      try {
-        spark.catalog.refreshTable(table)
-        val got = spark.table(table)
-          .select(col("key"), col("total"), col("rank"))
-          .as[(String, Long, Long)].collect().toSeq
-        if (got.isEmpty) lastGood.get() // the swap window — nothing committed lists 0 rows
-        else {
-          val data = got.filterNot(r => r._1 == BoardVersionKey && r._3 == 0L)
-          lastGood.set(data); data
-        }
-      } catch { case scala.util.control.NonFatal(_) => lastGood.get() }
-    rows.toDF("key", "total", "rank")
   }
 }

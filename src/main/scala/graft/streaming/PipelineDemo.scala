@@ -174,8 +174,8 @@ object PipelineDemo {
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val bucketJoin = graft.sources.StagingTables.read(spark, "demo_events_bucketed")
-        .join(graft.sources.StagingTables.read(spark, "demo_dim_bucketed"), "user_id")
+      val bucketJoin = spark.table("demo_events_bucketed")
+        .join(spark.table("demo_dim_bucketed"), "user_id")
       val bplan = bucketJoin.queryExecution.executedPlan.toString
       println(s"=== bucketed join: rows=${bucketJoin.count()} shuffle-free=${!bplan.contains("Exchange hashpartitioning")} ===")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)

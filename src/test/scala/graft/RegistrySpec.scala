@@ -162,20 +162,68 @@ class RegistrySpec extends SparkSpec {
     "StreamingTrend" -> Twin("a_trend"),
     "StreamingWindowedPercentiles" -> Twin("a_windowed_percentiles"))
 
-  test("each streaming file is paper path, registry twin or LLM op") {
-    val dir = mainRoot.resolve("graft/streaming")
-    val onDisk = mainSources.filter(_.getParent == dir)
-      .map(_.getFileName.toString.stripSuffix(".scala")).toSet
-    assert(onDisk.nonEmpty, s"no sources under $dir")
-    val unlisted = onDisk -- streamingFiles.keySet
-    val gone = streamingFiles.keySet -- onDisk
-    assert(unlisted.isEmpty, s"streaming files with no reason to stay: ${unlisted.toSeq.sorted}")
-    assert(gone.isEmpty, s"listed streaming files not on disk: ${gone.toSeq.sorted}")
+  /** The same rule per public function of `Pipeline`, whose file
+    * entry above says only that some of it is the paper's path. */
+  private val pipelineFunctions: Map[String, Earns] = Map(
+    "parquetSink" -> PaperPath,
+    "processBatch" -> PaperPath,
+    "start" -> PaperPath,
+    "windowedBranchStats" -> PaperPath, // the parity branch, windowed
+    "dedupStream" -> PaperPath, // drops the at-least-once re-deliveries
+    "correlateStreams" -> Twin("q_log_correlation"),
+    "sessionStats" -> Twin("a_session_window"),
+    "embeddingDrift" -> LlmOperator, // ingest drift of embedding centroids
+    "driftAlarm" -> LlmOperator,
+    "psiMonitor" -> Twin("s_psi"),
+    "ingestDedup" -> LlmOperator, // the streaming half of exact dedup
+    "decontamGate" -> Twin("d_contamination_bloom"),
+    "decontamSpans" -> Twin("d_span_dedup"),
+    "incrementalGate" -> Twin("d_incremental_dedup"),
+    "winnowGate" -> Twin("d_winnow_pairs"),
+    "ahashGate" -> Twin("m_ahash_dedup"),
+    "substringGate" -> Twin("d_substring_fraction"),
+    "intervalOverlapStream" -> Twin("a_interval_join"),
+    "dsirGate" -> Twin("t_dsir_weights"),
+    "annStream" -> Twin("s_ann_store"),
+    "annGate" -> Twin("s_ann_store"),
+    "funnelHourly" -> Twin("a_funnel_hourly"),
+    "chunkGate" -> Twin("d_chunk_apply"),
+    "fkGate" -> Twin("p_fk_violations"),
+    "forgetGate" -> Twin("e_forget"),
+    "forgetAudit" -> Twin("e_forget"),
+    "freshnessDayGauge" -> Twin("p_freshness"),
+    "freshnessDayGaugeWatermarked" -> Twin("p_freshness"),
+    "freshnessDayCompactor" -> Twin("p_freshness"),
+    "freshnessDayHistory" -> Twin("p_freshness"),
+    "freshnessDayReport" -> Twin("p_freshness"),
+    "dailyDistinct" -> Twin("a_daily_distinct_kmv"),
+    "bm25Gate" -> Twin("t_bm25_topk"))
+
+  /** `table` names exactly the `what` on disk, and every twin's row
+    * is in the registry. */
+  private def assertEarns(what: String, onDisk: Set[String],
+      table: Map[String, Earns]): Unit = {
+    assert(onDisk.nonEmpty, s"no $what found")
+    val unlisted = onDisk -- table.keySet
+    val gone = table.keySet -- onDisk
+    assert(unlisted.isEmpty, s"$what with no reason to stay: ${unlisted.toSeq.sorted}")
+    assert(gone.isEmpty, s"listed $what not on disk: ${gone.toSeq.sorted}")
     val rows = SparkEntry.queries.keySet
-    val noRow = streamingFiles.toSeq.collect {
+    val noRow = table.toSeq.collect {
       case (f, Twin(row)) if !rows.contains(row) => s"$f -> $row"
     }
     assert(noRow.isEmpty, s"twins of rows not in the registry: ${noRow.sorted}")
+  }
+
+  test("each streaming file is paper path, registry twin or LLM op") {
+    val dir = mainRoot.resolve("graft/streaming")
+    assertEarns("streaming files", mainSources.filter(_.getParent == dir)
+      .map(_.getFileName.toString.stripSuffix(".scala")).toSet, streamingFiles)
+    val publicDef = """^  def (\w+)""".r
+    assertEarns("Pipeline functions",
+      java.nio.file.Files.readAllLines(dir.resolve("Pipeline.scala")).asScala
+        .flatMap(publicDef.findFirstMatchIn(_).map(_.group(1))).toSet,
+      pipelineFunctions)
   }
 
   test("every string-literal PlanCache tag is passed at exactly one call site") {
@@ -209,10 +257,10 @@ class RegistrySpec extends SparkSpec {
 }
 
 object RegistrySpec {
-  /** Why a `graft.streaming` file stays: it serves the paper's
-    * decode → context → branch → four-sink path, it is the streaming
-    * twin of a registry row (with a replay-equality spec), or it is
-    * one of the LLM-pipeline operators. */
+  /** Why a `graft.streaming` file or `Pipeline` function stays: it
+    * serves the paper's decode → context → branch → four-sink path, it
+    * is the streaming twin of a registry row (with a replay-equality
+    * spec), or it is one of the LLM-pipeline operators. */
   sealed trait Earns
   case object PaperPath extends Earns
   final case class Twin(row: String) extends Earns

@@ -19,8 +19,8 @@ class StagingTablesSpec extends SparkSpec {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val joined = StagingTables.read(spark, "stg_events")
-        .join(StagingTables.read(spark, "stg_profile"), "user_id")
+      val joined = spark.table("stg_events")
+        .join(spark.table("stg_profile"), "user_id")
       val plan = joined.queryExecution.executedPlan.toString
       assert(plan.contains("SortMergeJoin"), s"expected a sort-merge join:\n$plan")
       assert(!plan.contains("Exchange hashpartitioning"),
@@ -29,40 +29,58 @@ class StagingTablesSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
-  test("initPartitionedIfAbsent migrates a pre-partitioned-layout table, preserving rows") {
-    // a table written by the OLD append-mode compactor: 4 columns, no
-    // batch_id partition — a restart under the new layout must not
-    // die on the positional insert, and must not erase survived rows
-    StagingTables.writeSmall(
-      Seq(("view", 9L, 3L, 900L), ("click", 10L, 1L, 1000L))
-        .toDF("event_type", "day", "n_day", "last_us"), "stg_migrate")
-    val withPart = Seq.empty[(String, Long, Long, Long)]
+  test("initPartitionedIfAbsent over an existing partitioned table keeps its rows and is a no-op") {
+    val layout = Seq.empty[(String, Long, Long, Long)]
       .toDF("event_type", "day", "n_day", "last_us")
       .withColumn("batch_id", lit(0L))
-    StagingTables.initPartitionedIfAbsent(withPart, "stg_migrate", "batch_id")
-    val rows = spark.table("stg_migrate")
-      .as[(String, Long, Long, Long, Long)].collect().toSet
-    assert(rows === Set(("view", 9L, 3L, 900L, -1L), ("click", 10L, 1L, 1000L, -1L)),
-      s"migration must land survived rows in the batch_id=-1 sentinel partition: $rows")
-    // and the new layout's positional insert now works
+    StagingTables.initPartitionedIfAbsent(layout, "stg_restart", "batch_id")
+    assert(spark.table("stg_restart").count() === 0L)
+    graft.streaming.Pipeline.compactBatch(
+      Seq(("view", 9L, 3L, 900L), ("click", 10L, 1L, 1000L))
+        .toDF("event_type", "day", "n_day", "last_us"), "stg_restart", 4L)
+    val before = spark.table("stg_restart").collect().map(_.toString).sorted.toSeq
+    assert(before.size === 2)
+    // the restarted writer initializes the same table: its rows must
+    // survive, and its partitioned layout still takes the next batch
+    StagingTables.initPartitionedIfAbsent(layout, "stg_restart", "batch_id")
+    assert(spark.table("stg_restart").collect().map(_.toString).sorted.toSeq === before)
     graft.streaming.Pipeline.compactBatch(
       Seq(("purchase", 11L, 2L, 1100L)).toDF("event_type", "day", "n_day", "last_us"),
-      "stg_migrate", 7L)
-    val after = graft.streaming.Pipeline
-      .freshnessDayHistory(spark, "stg_migrate")
+      "stg_restart", 5L)
+    val after = graft.streaming.Pipeline.freshnessDayHistory(spark, "stg_restart")
       .as[(String, Long, Long, Long)].collect().toSet
     assert(after === Set(("view", 9L, 3L, 900L), ("click", 10L, 1L, 1000L),
       ("purchase", 11L, 2L, 1100L)))
-    // idempotent: a second init over the migrated table is a no-op
-    StagingTables.initPartitionedIfAbsent(withPart, "stg_migrate", "batch_id")
-    assert(spark.table("stg_migrate").count() === 3L)
+  }
+
+  test("writeBucketed and initPartitionedIfAbsent refuse unsafe identifiers before any drop or delete") {
+    val wh = new java.io.File(
+      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
+    // the directories a recursive delete of each identifier would hit
+    // inside the warehouse; "../<warehouse>" would take all of it
+    val unsafe = Seq("a;b", "../x", "a.b.c", s"../${wh.getName}")
+    val sentinels = Seq("a;b", "a.b.c").map { d =>
+      val f = new java.io.File(new java.io.File(wh, d), "sentinel")
+      f.getParentFile.mkdirs()
+      java.nio.file.Files.writeString(f.toPath, "keep")
+      f
+    }
+    val df = Seq((1L, 2L)).toDF("k", "batch_id")
+    try {
+      unsafe.foreach { id =>
+        intercept[IllegalArgumentException](StagingTables.writeBucketed(df, id, "k", 2))
+        intercept[IllegalArgumentException](
+          StagingTables.initPartitionedIfAbsent(df, id, "batch_id"))
+      }
+      sentinels.foreach(f => assert(f.isFile, s"$f was deleted"))
+    } finally sentinels.foreach(f => StagingTables.deleteRecursively(f.getParentFile))
   }
 
   test("aggregation on the bucket key also avoids the shuffle") {
     // self-contained: writes its own table so the test runs alone
     val events = (1L to 500L).map(i => (i, i % 50)).toDF("event_id", "user_id")
     StagingTables.writeBucketed(events, "stg_agg", "user_id", 8)
-    val counts = StagingTables.read(spark, "stg_agg")
+    val counts = spark.table("stg_agg")
       .groupBy("user_id").agg(count(lit(1)).as("n"))
     val plan = counts.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange hashpartitioning"),

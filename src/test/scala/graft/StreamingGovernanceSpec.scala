@@ -110,62 +110,6 @@ class StreamingGovernanceSpec extends SparkSpec {
     } finally { qG.stop(); qA.stop() }
   }
 
-  test("freshness gauge + report equals the batch p_freshness projection on replay") {
-    withRocksDB {
-      val t0 = 1700000000000L
-      // purchase goes stale (10 h behind), click is 5 h behind
-      // (fresh), view is the freshest type
-      val rows: Seq[(Long, java.sql.Timestamp, Long, String, Double, String)] =
-        Seq[(String, Long)](
-          ("view", 0L), ("view", 3L), ("view", 10L),
-          ("click", 0L), ("click", 5L),
-          ("purchase", 0L)).zipWithIndex.map { case ((tpe, hrs), i) =>
-          ((100 + i).toLong, new java.sql.Timestamp(t0 + hrs * 3600000L),
-            (i % 3).toLong, tpe, 1.0, "{}")
-        }
-      val dir = java.nio.file.Files.createTempDirectory("fresh-fixture").toString
-      rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        .write.mode("overwrite").parquet(s"$dir/events.parquet")
-      val batch = SparkEntry.queries("p_freshness")(spark, dir)
-        .select("event_type", "n_total", "last_us", "lag_us", "fresh_6h")
-        .as[(String, Long, Long, Long, Boolean)].collect().toSet
-
-      implicit val sqlCtx = spark.sqlContext
-      val input = MemoryStream[(Long, java.sql.Timestamp, String)]
-      val gauge = Pipeline.freshnessGauge(input.toDF()
-        .toDF("event_id", "ts", "event_type"))
-      // the topkServe consumption shape: upsert the update-mode rows
-      // into a driver map per micro-batch, report over the live table
-      val state = scala.collection.mutable.Map.empty[String, (Long, Long)]
-      val q = gauge.writeStream.outputMode("update")
-        .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          df.collect().foreach { r =>
-            state.synchronized {
-              state(r.getString(0)) = (r.getLong(1), r.getLong(2))
-            }
-          }
-          ()
-        }
-        .start()
-      try {
-        val slices = rows.map(r => (r._1, r._2, r._4)).grouped(3).toSeq
-        slices.foreach { s => input.addData(s); q.processAllAvailable() }
-      } finally q.stop()
-
-      val live = state.synchronized { state.toSeq }
-        .map { case (tpe, (last, n)) => (tpe, last, n) }
-        .toDF("event_type", "last_us", "n_total")
-      val got = Pipeline.freshnessReport(live)
-        .as[(String, Long, Long, Long, Boolean)].collect().toSet
-      assert(got === batch,
-        "the live gauge must reproduce the batch freshness projection " +
-          "(purchase stale, click fresh) on a full replay")
-      assert(got.exists(r => r._1 == "purchase" && !r._5) &&
-        got.exists(r => r._1 == "click" && r._5),
-        "the fixture must exercise both sides of the 6 h flag")
-    }
-  }
-
   test("day gauge replays to the batch projection; n_last_day bracketed, exact on aligned cuts") {
     withRocksDB {
       val dayUs = 86400000000L
@@ -343,18 +287,11 @@ class StreamingGovernanceSpec extends SparkSpec {
       val report = graft.streaming.Pipeline
         .freshnessDayReport(Pipeline.freshnessDayHistory(spark, "freshness_days"))
         .as[(String, Long, Long, Long, Long, Boolean)].collect().toSet
-      val evs = closing.toDF("event_id", "ts", "event_type")
-        .select(col("event_type"), expr("unix_micros(ts)").as("us"))
-      val gmax = evs.agg(max(col("us")).as("g_us"))
-      val exact = evs.crossJoin(broadcast(gmax))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_total"), max(col("us")).as("last_us"),
-          max(col("g_us")).as("g_us"),
-          sum(when(col("us") >= col("g_us") - dayUs, 1L).otherwise(0L))
-            .as("n_last_day"))
-        .select(col("event_type"), col("n_total"), col("last_us"),
-          (col("g_us") - col("last_us")).as("lag_us"), col("n_last_day"),
-          (col("g_us") - col("last_us") <= 21600000000L).as("fresh_6h"))
+      val dir = java.nio.file.Files.createTempDirectory("fresh-fixture").toString
+      closing.map { case (id, ts, tpe) => (id, ts, 0L, tpe, 1.0, "{}") }
+        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+        .write.mode("overwrite").parquet(s"$dir/events.parquet")
+      val exact = SparkEntry.queries("p_freshness")(spark, dir)
         .as[(String, Long, Long, Long, Long, Boolean)].collect().toSet
       assert(report === exact,
         "day report over compacted history must equal p_freshness on the aligned cut")

@@ -81,174 +81,6 @@ class StreamingTopKSpec extends SparkSpec {
     }
   }
 
-  test("live serve: requests score against the freshest published board") {
-    withRocksDB {
-      implicit val sqlCtx = spark.sqlContext
-      val incs = MemoryStream[Inc]
-      val reqs = MemoryStream[String]
-      val got = scala.collection.mutable.ArrayBuffer
-        .empty[(String, Option[Long], Option[Long], Boolean)]
-      val sink: graft.streaming.Pipeline.Sink = (_, df) =>
-        got.synchronized {
-          got ++= df.collect().map { r =>
-            (r.getAs[String]("key"),
-              Option(r.getAs[java.lang.Long]("total")).map(_.longValue),
-              Option(r.getAs[java.lang.Long]("rank")).map(_.longValue),
-              r.getAs[Boolean]("in_topk"))
-          }
-        }
-      val (pub, serve) = graft.streaming.Pipeline.topkServe(
-        incs.toDS(), reqs.toDS().toDF("key"), k = 2, shards = 2,
-        "topk_serve_view")(sink)
-      try {
-        // cold start: nothing published yet -> in_topk = false
-        reqs.addData("a"); serve.processAllAvailable()
-        assert(got.toSeq === Seq(("a", None, None, false)))
-        got.clear()
-        // batch 1: a=5 b=3 c=1 -> board (a,5),(b,3)
-        incs.addData(Seq(Inc("a", 5L), Inc("b", 3L), Inc("c", 1L)))
-        pub.processAllAvailable()
-        reqs.addData("a", "c"); serve.processAllAvailable()
-        assert(got.toSet === Set(
-          ("a", Some(5L), Some(1L), true), ("c", None, None, false)))
-        got.clear()
-        // batch 2 flips the leader: c += 9 -> board (c,10),(a,5);
-        // the SAME request keys now answer differently
-        incs.addData(Seq(Inc("c", 9L)))
-        pub.processAllAvailable()
-        reqs.addData("a", "c", "b"); serve.processAllAvailable()
-        assert(got.toSet === Set(
-          ("a", Some(5L), Some(2L), true),
-          ("c", Some(10L), Some(1L), true),
-          ("b", None, None, false)))
-      } finally { serve.stop(); pub.stop() }
-    }
-  }
-
-  test("table-backed serve replays equal to the view form; board outlives the streams") {
-    withRocksDB {
-      implicit val sqlCtx = spark.sqlContext
-      val incs = MemoryStream[Inc]
-      val reqs = MemoryStream[String]
-      val got = scala.collection.mutable.ArrayBuffer
-        .empty[(String, Option[Long], Option[Long], Boolean)]
-      val sink: graft.streaming.Pipeline.Sink = (_, df) =>
-        got.synchronized {
-          got ++= df.collect().map { r =>
-            (r.getAs[String]("key"),
-              Option(r.getAs[java.lang.Long]("total")).map(_.longValue),
-              Option(r.getAs[java.lang.Long]("rank")).map(_.longValue),
-              r.getAs[Boolean]("in_topk"))
-          }
-        }
-      val (pub, serve) = graft.streaming.Pipeline.topkServeTable(
-        incs.toDS(), reqs.toDS().toDF("key"), k = 2, shards = 2,
-        "topk_serve_table")(sink)
-      try {
-        // identical script to the view-backed test; identical answers
-        reqs.addData("a"); serve.processAllAvailable()
-        assert(got.toSeq === Seq(("a", None, None, false)))
-        got.clear()
-        incs.addData(Seq(Inc("a", 5L), Inc("b", 3L), Inc("c", 1L)))
-        pub.processAllAvailable()
-        reqs.addData("a", "c"); serve.processAllAvailable()
-        assert(got.toSet === Set(
-          ("a", Some(5L), Some(1L), true), ("c", None, None, false)))
-        got.clear()
-        incs.addData(Seq(Inc("c", 9L)))
-        pub.processAllAvailable()
-        reqs.addData("a", "c", "b"); serve.processAllAvailable()
-        assert(got.toSet === Set(
-          ("a", Some(5L), Some(2L), true),
-          ("c", Some(10L), Some(1L), true),
-          ("b", None, None, false)))
-      } finally { serve.stop(); pub.stop() }
-      // the publication SURVIVES the streams (and would survive the
-      // driver: it is a managed parquet table, not session state);
-      // every publication carries the rank-0 heartbeat row, and the
-      // PUBLIC reader view (topkBoard) strips it for external apps
-      val raw = spark.table("topk_serve_table").collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-      assert(raw.exists(_._3 === 0L),
-        s"publications must carry the rank-0 heartbeat row: $raw")
-      val after = graft.streaming.Pipeline.topkBoard(spark, "topk_serve_table")
-        .orderBy("rank").collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-      assert(after === Seq(("c", 10L, 1L), ("a", 5L, 2L)),
-        "the public board view must serve exactly the board rows")
-    }
-  }
-
-  test("table serve survives a driver restart: init is create-if-absent") {
-    withRocksDB {
-      implicit val sqlCtx = spark.sqlContext
-      // "previous driver" publishes a board
-      graft.sources.StagingTables.writeSmall(
-        Seq(("x", 9L, 1L)).toDF("key", "total", "rank"), "topk_restart_table")
-      val incs = MemoryStream[Inc]
-      val reqs = MemoryStream[String]
-      val got = scala.collection.mutable.ArrayBuffer.empty[(String, Boolean)]
-      val sink: graft.streaming.Pipeline.Sink = (_, df) =>
-        got.synchronized {
-          got ++= df.collect().map(r =>
-            (r.getAs[String]("key"), r.getAs[Boolean]("in_topk")))
-        }
-      // "restarted driver" wires the same table; before ANY new
-      // publication the surviving board must answer — startup must not
-      // overwrite it with an empty frame
-      val (pub, serve) = graft.streaming.Pipeline.topkServeTable(
-        incs.toDS(), reqs.toDS().toDF("key"), k = 2, shards = 2,
-        "topk_restart_table")(sink)
-      try {
-        reqs.addData("x", "y"); serve.processAllAvailable()
-        assert(got.toSet === Set(("x", true), ("y", false)),
-          s"surviving board erased at restart: ${got.toSeq}")
-      } finally { serve.stop(); pub.stop() }
-    }
-  }
-
-  test("mid-swap reads serve the last good board instead of failing") {
-    val lastGood = new java.util.concurrent.atomic.AtomicReference[
-      Seq[(String, Long, Long)]](Seq.empty)
-    graft.sources.StagingTables.writeSmall(
-      Seq(("a", 7L, 1L)).toDF("key", "total", "rank"), "topk_swap_table")
-    val first = graft.streaming.Pipeline
-      .boardSnapshot(spark, "topk_swap_table", lastGood).collect()
-    assert(first.map(_.getString(0)).toSeq === Seq("a"))
-    // the drop+recreate window of a non-transactional overwrite:
-    // resolution fails — the snapshot must keep serving the last board
-    spark.sql("DROP TABLE topk_swap_table")
-    val dropped = graft.streaming.Pipeline
-      .boardSnapshot(spark, "topk_swap_table", lastGood).collect()
-    assert(dropped.map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-      === Seq(("a", 7L, 1L)), "mid-swap read must serve the last good board")
-    // an EMPTY listing (0 rows) after a board was seen is the same
-    // window — every committed publication carries the rank-0
-    // heartbeat, so nothing legitimate ever lists 0 rows
-    graft.sources.StagingTables.writeSmall(
-      Seq.empty[(String, Long, Long)].toDF("key", "total", "rank"),
-      "topk_swap_table")
-    val empty = graft.streaming.Pipeline
-      .boardSnapshot(spark, "topk_swap_table", lastGood).collect()
-    assert(empty.map(_.getString(0)).toSeq === Seq("a"),
-      "post-publication empty listing must serve the last good board")
-    // a published EMPTY board — heartbeat row, no data rows — is a
-    // COMMITTED publication and must be served empty, not shadowed by
-    // the stale last-good forever (the round-12 advice case)
-    graft.sources.StagingTables.writeSmall(
-      Seq((graft.streaming.Pipeline.BoardVersionKey, 3L, 0L))
-        .toDF("key", "total", "rank"), "topk_swap_table")
-    val publishedEmpty = graft.streaming.Pipeline
-      .boardSnapshot(spark, "topk_swap_table", lastGood).collect()
-    assert(publishedEmpty.isEmpty,
-      "a heartbeat-only publication is a real empty board, serve it empty")
-    // and the snapshot moved on: a subsequent swap window now falls
-    // back to the EMPTY board, not the long-gone ("a") one
-    spark.sql("DROP TABLE topk_swap_table")
-    assert(graft.streaming.Pipeline
-      .boardSnapshot(spark, "topk_swap_table", lastGood).collect().isEmpty)
-  }
-
   private def replayDelta(slices: Seq[Seq[Inc]], k: Int, shards: Int,
       name: String): Seq[Board] = {
     implicit val sqlCtx = spark.sqlContext
