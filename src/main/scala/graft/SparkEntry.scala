@@ -4285,7 +4285,7 @@ object SparkEntry {
       .groupBy("m").agg(count(lit(1)).as("c"))
     val nq = brute.agg(countDistinct(col("q_id")).as("n_q"))
     val ks = s.range(1, 6).select(col("id").as("k"))
-    broadcast(ks).join(hist, col("m") <= col("k"), "left_outer")
+    ks.join(hist, col("m") <= col("k"), "left_outer")
       .groupBy("k").agg(sum(col("c")).as("h0"))
       .crossJoin(broadcast(nq))
       .select(col("k"), expr("coalesce(h0, 0L)").as("hits"),
@@ -4308,10 +4308,9 @@ object SparkEntry {
   private def aBenford(s: SparkSession, dir: String): DataFrame = {
     val exp = BenfordE6.zipWithIndex
       .map { case (e, i) => struct(lit(i + 1L).as("digit"), lit(e).as("expected_e6")) }
-    val expDf = broadcast(
-      T(s, dir, "orders").sparkSession.range(1).select(
-        explode(array(exp: _*)).as("x"))
-        .select(col("x.digit").as("digit"), col("x.expected_e6").as("expected_e6")))
+    val expDf = T(s, dir, "orders").sparkSession.range(1)
+      .select(explode(array(exp: _*)).as("x"))
+      .select(col("x.digit").as("digit"), col("x.expected_e6").as("expected_e6"))
     val tot = T(s, dir, "orders").agg(count(lit(1)).as("n_tot"))
     val counts = T(s, dir, "orders")
       .select(expr(
@@ -4511,7 +4510,7 @@ object SparkEntry {
     hist.crossJoin(broadcast(thr))
       .filter(col("s_e4") >= col("t"))
       .groupBy("t").agg(sum("c").as("n_pred"), sum("cp").as("tp"))
-      .join(broadcast(thr), Seq("t"), "right_outer")
+      .join(thr, Seq("t"), "right_outer")
       .select(col("t"), coalesce(col("n_pred"), lit(0L)).as("n_pred"),
         coalesce(col("tp"), lit(0L)).as("tp"))
       .crossJoin(broadcast(tot))
@@ -6329,7 +6328,7 @@ object SparkEntry {
     val share = round(expr("""(CAST(cum_before AS DOUBLE) * c + CAST(bx AS DOUBLE)
           * ((k * n) div 10 - start + 1)) / c / t"""), 6)
     if (dense)
-      broadcast(deciles).join(cum, probe, "left_outer")
+      deciles.join(cum, probe, "left_outer")
         .select(col("k"),
           coalesce(expr("(k * n) div 10"), lit(0L)).as("n_members"),
           coalesce(share, lit(0.0)).as("cum_share"))

@@ -81,12 +81,20 @@ object Codecs {
     try_element_at(filter(headers, h => h.getField("key") === name), lit(-1))
       .getField("value")
 
-  /** Replace-or-append a header, preserving all other keys and their
-    * order (SURVEY.md §7.4 "header column round-trip"). */
-  def headerSet(headers: Column, name: String, value: Column): Column =
+  /** Replace-or-append headers, preserving all other keys and their
+    * order (SURVEY.md §7.4 "header column round-trip"): the other
+    * headers, then one header per pair in argument order. One `filter`
+    * and one `concat` whatever the pair count — nesting single-pair
+    * calls gives the same array, but the outer `filter` then takes the
+    * inner `concat` as its argument and both evaluate interpreted. An
+    * entry with a null key is dropped; null headers stay null. */
+  def headerSet(headers: Column, pairs: (String, Column)*): Column = {
+    val names = pairs.map(_._1)
+    require(names.nonEmpty && names.distinct == names, s"headerSet needs distinct names: $names")
     concat(
-      filter(headers, h => h.getField("key") =!= name),
-      array(struct(lit(name).as("key"), value.as("value"))))
+      filter(headers, h => !h.getField("key").isin(names: _*)),
+      array(pairs.map { case (n, v) => struct(lit(n).as("key"), v.as("value")) }: _*))
+  }
 
   /** Tokenize: trim, lowercase, split on whitespace, drop empties —
     * mirrored verbatim by the oracle SQL. */

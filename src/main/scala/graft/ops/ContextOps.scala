@@ -1,5 +1,6 @@
 package graft.ops
 
+import scala.collection.immutable.ListMap
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -23,23 +24,26 @@ object ContextOps {
     * minted from (topic, partition, offset) when no b3 header is
     * present. Narrow; fully codegen'd. */
   def decode(raw: DataFrame): DataFrame = {
-    val b3 = headerLast(col("headers"), "b3").cast("string")
-    raw
-      .withColumn("key", col("key").cast("string"))
-      .withColumn("value_int", beInt(col("value")))
-      .withColumn("b3_in", b3)
-      .withColumn("trace_id",
-        coalesce(b3TraceId(col("b3_in")),
-          traceIdFrom(concat_ws("/", col("topic"), col("partition"), col("offset")))))
-      .withColumn("parent_id", b3SpanId(col("b3_in")))
-      .withColumn("sampled", coalesce(b3Sampled(col("b3_in")), lit(true)))
+    // one projection per dependency level (raw → b3 → trace id), not one
+    // eagerly analysed `withColumn` per column
+    val withB3 = raw.withColumns(ListMap(
+      "key" -> col("key").cast("string"),
+      "value_int" -> beInt(col("value")),
+      "b3_in" -> headerLast(col("headers"), "b3").cast("string")))
+    val withCtx = withB3.withColumns(ListMap(
+      "trace_id" -> coalesce(b3TraceId(col("b3_in")),
+        traceIdFrom(concat_ws("/", col("topic"), col("partition"), col("offset")))),
+      "parent_id" -> b3SpanId(col("b3_in")),
+      "sampled" -> coalesce(b3Sampled(col("b3_in")), lit(true))))
+    val dropped = Set("b3_in", "value", "timestampType")
+    withCtx.select(withCtx.columns.toSeq.collect {
+      case "timestamp" => withCtx("timestamp").as("ts")
+      case c if !dropped(c) => withCtx(c)
+    } :+
       // per-record span seed: many records can share one trace, but each
       // processing hop of each record mints its OWN span (reference
       // README.adoc:124); (partition, offset) disambiguates the record
-      .withColumn("hop_seed",
-        concat_ws("/", col("trace_id"), col("partition"), col("offset")))
-      .withColumnRenamed("timestamp", "ts")
-      .drop("b3_in", "value", "timestampType")
+      concat_ws("/", col("trace_id"), col("partition"), col("offset")).as("hop_seed"): _*)
   }
 
   /** Span-mint seed: per-record when the frame carries one (streaming
@@ -65,11 +69,12 @@ object ContextOps {
     * the messageid baggage and open a child span for this hop — a pure
     * projection; the span itself is emitted by [[standardSpans]]. */
   def setBaggage(df: DataFrame, prodIds: Boolean = false): DataFrame =
-    df.withColumn("messageid", concat(lit("messageid_"), col("value_int").cast("string")))
-      .withColumn("span_id",
+    df.withColumns(ListMap(
+      "messageid" -> concat(lit("messageid_"), col("value_int").cast("string")),
+      "span_id" ->
         // prodIds: RANDOM span ids (the reference's actual behavior);
         // the deterministic form is what the Verify registry needs
-        if (prodIds) mintSpanIdRandom() else mintSpanId(hopSeed(df), lit("set")))
+        (if (prodIds) mintSpanIdRandom() else mintSpanId(hopSeed(df), lit("set")))))
 
   // ---------------------------------------------------------------- branch
 
@@ -204,11 +209,10 @@ object ContextOps {
   /** Re-encode context as output headers (replace b3, append messageid),
     * preserving any other headers — the reference's output contract
     * (StreamsConfigTest.java:64,111). */
-  def encodeHeaders(df: DataFrame): DataFrame = {
-    val withB3 = headerSet(col("headers"),
-      "b3", b3Render(col("trace_id"), col("span_id"), col("sampled")).cast("binary"))
-    df.withColumn("headers",
-      headerSet(withB3, "messageid", col("messageid").cast("binary")))
-      .withColumn("value", beIntEncode(col("value_int")))
-  }
+  def encodeHeaders(df: DataFrame): DataFrame =
+    df.withColumns(ListMap(
+      "headers" -> headerSet(col("headers"),
+        "b3" -> b3Render(col("trace_id"), col("span_id"), col("sampled")).cast("binary"),
+        "messageid" -> col("messageid").cast("binary")),
+      "value" -> beIntEncode(col("value_int"))))
 }

@@ -44,9 +44,21 @@ object Pipeline {
     * [[graft.sources.LocalFs.writeOptions]] (`fs.file.impl` and
     * `fs.file.impl.disable.cache`): they reach the committer and the
     * tasks through the write's Hadoop conf, where a session setting
-    * could not replace the `file:` instance Hadoop has already cached. */
+    * could not replace the `file:` instance Hadoop has already cached.
+    *
+    * It writes without dictionary encoding (`parquet.enable.dictionary`
+    * false, by the same route). The columns of this topology's outputs
+    * are unique per record (trace, span and hop ids, messageid, the MDC
+    * JSON, header values), so parquet hashed every value into a
+    * dictionary and dropped it for PLAIN at the first page flush. In a
+    * JFR profile of the `stream_pipeline` backlog drain (4 cores) that
+    * was 177 of 401 executor samples. Without it, executor time per
+    * thousand records went from 48.5 to 25.5 ms, the drain's records/s
+    * from a median 27.2 k to 37.8 k over 11 seeds, and the files grew
+    * 2.3 %. Batch and staging writers keep the default. */
   def parquetSink(path: String): Sink = (_, df) => {
-    df.write.mode("append").options(LocalFs.writeOptions).parquet(path)
+    df.write.mode("append").options(LocalFs.writeOptions)
+      .option("parquet.enable.dictionary", "false").parquet(path)
   }
 
   /** Decode + enrich + branch one micro-batch; returns the four

@@ -50,11 +50,34 @@ class CodecsSpec extends SparkSpec {
       """SELECT array(named_struct('key','b3','value',cast('old' as binary)),
         |             named_struct('key','keep','value',cast('k' as binary))) AS headers""".stripMargin)
     val out = df.select(
-      Codecs.headerLast(Codecs.headerSet(col("headers"), "b3", lit("new").cast("binary")), "b3")
+      Codecs.headerLast(Codecs.headerSet(col("headers"), "b3" -> lit("new").cast("binary")), "b3")
         .cast("string"),
-      Codecs.headerLast(Codecs.headerSet(col("headers"), "b3", lit("new").cast("binary")), "keep")
+      Codecs.headerLast(Codecs.headerSet(col("headers"), "b3" -> lit("new").cast("binary")), "keep")
         .cast("string")).as[(String, String)].head()
     assert(out === (("new", "k")))
+  }
+
+  test("multi-pair headerSet equals the nested single-pair form, other keys in order") {
+    val cases: Seq[(Option[Seq[(String, String)]], String)] = Seq(
+      (Some(Seq("x" -> "1", "b3" -> "old1", "y" -> "2", "b3" -> "old2", "z" -> "3")), "m1"),
+      (Some(Seq("messageid" -> "stale", "x" -> "1")), "m2"),
+      (Some(Seq((null, "n"), "x" -> "1")), "m3"),
+      (None, "m4"))
+    val df = cases.toDF("h0", "m").select(
+      transform(col("h0"), h =>
+        struct(h.getField("_1").as("key"), h.getField("_2").cast("binary").as("value"))).as("headers"),
+      col("m").cast("binary").as("mid"))
+    val b3 = lit("new").cast("binary")
+    val multi = Codecs.headerSet(col("headers"), "b3" -> b3, "messageid" -> col("mid"))
+    val nested = Codecs.headerSet(Codecs.headerSet(col("headers"), "b3" -> b3), "messageid" -> col("mid"))
+    assert(df.filter(!(multi <=> nested)).count() === 0L)
+    val got = df.select(transform(multi, h => concat(h.getField("key"), lit("="),
+      h.getField("value").cast("string")))).as[Option[Seq[String]]].collect().toSeq
+    assert(got === Seq(
+      Some(Seq("x=1", "y=2", "z=3", "b3=new", "messageid=m1")),
+      Some(Seq("x=1", "b3=new", "messageid=m2")),
+      Some(Seq("x=1", "b3=new", "messageid=m3")),
+      None))
   }
 
   test("BigEndianInt32 decodes the Kafka wire format, including negatives") {

@@ -179,6 +179,19 @@ class PlanShapeSpec extends SparkSpec {
     } finally batch.unpersist()
   }
 
+  test("encodeHeaders replaces b3 and messageid with one filter over the headers") {
+    import org.apache.spark.sql.catalyst.expressions.ArrayFilter
+    import org.apache.spark.sql.functions._
+    val id = col("id").cast("string")
+    val d = spark.range(4).select(
+      array(struct(lit("b3").as("key"), id.cast("binary").as("value"))).as("headers"),
+      id.as("trace_id"), id.as("span_id"), lit(true).as("sampled"), id.as("messageid"),
+      col("id").cast("int").as("value_int"))
+    val plan = graft.ops.ContextOps.encodeHeaders(d).queryExecution.optimizedPlan
+    val filters = plan.flatMap(_.expressions.flatMap(_.collect { case f: ArrayFilter => f }))
+    assert(filters.size === 1, s"one filter over the headers:\n$plan")
+  }
+
   test("log correlation prunes the unused mdc JSON out of the log fan-out") {
     // the optimizer rewrites to_json into an invoke of StructsToJsonEvaluator
     def json(p: String) = p.toLowerCase.contains("to_json") || p.toLowerCase.contains("tojson")

@@ -47,7 +47,7 @@ class PropertySpec extends SparkSpec {
         .select(transform(col("h0"), h =>
           struct(h.getField("_1").as("key"), h.getField("_2").as("value"))).as("headers"),
           col("v"))
-        .select(Codecs.headerSet(col("headers"), k, col("v")).as("out"))
+        .select(Codecs.headerSet(col("headers"), k -> col("v")).as("out"))
       val out = df.select(explode(col("out")).as("h"))
         .select(col("h.key"), col("h.value")).as[(String, String)].collect().toSeq
       val last = df.select(Codecs.headerLast(col("out"), k).as("lv")).as[String].head()

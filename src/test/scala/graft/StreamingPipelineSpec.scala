@@ -2,6 +2,10 @@ package graft
 
 import java.nio.file.Files
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -29,9 +33,9 @@ class StreamingPipelineSpec extends SparkSpec {
       new Timestamp(1700000000000L + off), 0,
       Seq(Header("b3", s"$traceId-$spanId-1".getBytes("UTF-8"))))
 
-  /** Run the pipeline over the given records; returns the four sink
-    * frames (even, odd, spans, logs). */
-  private def run(records: Seq[RawRecord]): (DataFrame, DataFrame, DataFrame, DataFrame) = {
+  /** Run the pipeline over the given records into four parquet sinks;
+    * returns their dirs (even, odd, spans, logs). */
+  private def runDirs(records: Seq[RawRecord]): Seq[String] = {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[RawRecord]
     input.addData(records)
@@ -42,8 +46,13 @@ class StreamingPipelineSpec extends SparkSpec {
       Pipeline.parquetSink(dirs(2)), Pipeline.parquetSink(dirs(3)),
       s"$base/ckpt")
     q.processAllAvailable(); q.stop()
-    (spark.read.parquet(dirs(0)), spark.read.parquet(dirs(1)),
-      spark.read.parquet(dirs(2)), spark.read.parquet(dirs(3)))
+    dirs
+  }
+
+  /** [[runDirs]], read back: the four sink frames. */
+  private def run(records: Seq[RawRecord]): (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    val Seq(even, odd, spans, logs) = runDirs(records).map(spark.read.parquet(_))
+    (even, odd, spans, logs)
   }
 
   private val traceId = "1234567890123456"
@@ -90,6 +99,32 @@ class StreamingPipelineSpec extends SparkSpec {
       .as[String].head()
     assert(mid === "messageid_8")
     assert(logs.filter(col("messageid") === "messageid_8").count() > 0)
+  }
+
+  test("parquet sinks write no dictionary page; the rows read back equal processBatch's") {
+    // low-cardinality keys and topic: a dictionary-encoding writer would keep their dictionaries
+    val records = (1 to 40).map(i => record(s"k${i % 3}", i, traceId, parentSpan, i)) :+
+      record("unheadered", 41, traceId, parentSpan, 41).copy(headers = Seq.empty)
+    val dirs = runDirs(records)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val chunks = dirs.flatMap { d =>
+      new java.io.File(d).listFiles().toSeq.filter(_.getName.endsWith(".parquet")).flatMap { f =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f.toURI), conf))
+        try r.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala)
+          .map(c => (s"${f.getName}:${c.getPath.toDotString}", c.hasDictionaryPage))
+        finally r.close()
+      }
+    }
+    assert(chunks.nonEmpty)
+    val dictionary = chunks.filter(_._2).map(_._1)
+    assert(dictionary.isEmpty, s"column chunks with a dictionary page: $dictionary")
+    val want = Pipeline.processBatch(spark.createDataFrame(records))
+    val wants = Seq(want._1, want._2, want._3, want._4)
+    dirs.zip(wants).foreach { case (d, w) =>
+      val got = spark.read.parquet(d)
+      assert(got.columns.toSeq === w.columns.toSeq, d)
+      assert(got.exceptAll(w).isEmpty && w.exceptAll(got).isEmpty, d)
+    }
   }
 
   test("windowed branch stats finalize once the watermark passes") {
